@@ -6,8 +6,9 @@ import java.nio.file.{Files, Paths}
   * DB files via `NALI_DB_IP4` / `NALI_DB_IP6` (qqwry / zxipv6wry /
   * GeoIP2 mmdb / ipip.net ipdb) with `NALI_LANG` steering language-aware
   * formats. All four formats convert offline into the same sorted
-  * [[IpRange]] table feeding the broadcast-binsearch lookup
-  * ([[IpRangeLookup]]), so per-row probe cost is format-independent.
+  * [[IpRange]] table, which ships as one broadcast [[GeoTable]] that
+  * [[IpRangeLookup]] binary-searches, so per-row probe cost is
+  * format-independent.
   *
   * The env var holds a file path; the format is sniffed from content
   * (mmdb metadata marker / ipdb JSON header / qqwry-zx fallback), so the

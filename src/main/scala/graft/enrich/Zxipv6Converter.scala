@@ -4,7 +4,7 @@ import java.nio.charset.Charset
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -122,7 +122,7 @@ case class Ipv6ToLongHi(child: Expression) extends UnaryExpression with CodegenF
 object Ipv6Enrich {
   /** `SearchIP` over IPv6 columns: same broadcast-binsearch lookup, keyed
     * on mapped top-64-bit prefixes. */
-  def lookup(ranges: Seq[IpRange])(ip: Column): Column =
-    ColumnBridge.col(IpRangeLookup.build(
-      Ipv6ToLongHi(ColumnBridge.expr(ip)), ranges))
+  def lookup(spark: SparkSession, ranges: Seq[IpRange])(ip: Column): Column =
+    ColumnBridge.col(IpRangeLookup(
+      Ipv6ToLongHi(ColumnBridge.expr(ip)), GeoTable.broadcast(spark, ranges)))
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.enrich.{IpRange, IpRangeLookup, Ipv4ToLong}
+import graft.enrich.{GeoTable, IpRange, IpRangeLookup, Ipv4ToLong}
 
 /** Unit coverage of the qqwry-style lookup primitives:
   * dotted-quad→uint32 (qqwry.go:64-72), rightmost-start binary search
@@ -42,8 +42,9 @@ class IpEnrichSpec extends AnyFunSuite {
     IpRange(400L, 499L, "England", "British Telecom"))
 
   private def lookup(ip: String): (String, String) = {
-    val e = IpRangeLookup.build(
-      Ipv4ToLong(Literal(UTF8String.fromString(ip), StringType)), ranges)
+    val e = IpRangeLookup(
+      Ipv4ToLong(Literal(UTF8String.fromString(ip), StringType)),
+      new LocalBroadcast(GeoTable.build(ranges)))
     val r = e.eval(InternalRow.empty).asInstanceOf[InternalRow]
     (r.getUTF8String(0).toString, r.getUTF8String(1).toString)
   }

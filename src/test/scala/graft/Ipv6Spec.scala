@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.enrich.{Ipv6ToLongHi, IpRange, IpRangeLookup, Zxipv6Converter}
+import graft.enrich.{GeoTable, Ipv6ToLongHi, IpRange, IpRangeLookup, Zxipv6Converter}
 
 /** IPv6 geo DB: top-64-bit keying, unsigned-order mapping, binary format
   * (ipHandle/pkg/zxipv6wry/zxipv6wry.go:59-133). */
@@ -75,8 +75,9 @@ class Ipv6Spec extends AnyFunSuite {
     assert(ranges(1).country === "美国")
 
     def lookup(ip: String): (String, String) = {
-      val e = IpRangeLookup.build(
-        Ipv6ToLongHi(Literal(UTF8String.fromString(ip), StringType)), ranges)
+      val e = IpRangeLookup(
+        Ipv6ToLongHi(Literal(UTF8String.fromString(ip), StringType)),
+        new LocalBroadcast(GeoTable.build(ranges)))
       val r = e.eval(InternalRow.empty).asInstanceOf[InternalRow]
       (r.getUTF8String(0).toString, r.getUTF8String(1).toString)
     }
