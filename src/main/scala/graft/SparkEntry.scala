@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.queries._
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Each entry in [[queries]] is one operator from SURVEY.md §2 exposed as a
@@ -15,44 +17,31 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.queries.Relational.q01AggPushdown(spark, "/root/testdata/sf0.001")
 
+  /** Every query module; each query name is registered by exactly one. */
+  val modules: Seq[QueryModule] = Seq(Relational, Parsing, Enrichment,
+    Sharded, LlmPipeline, EventQueries, CorpusExtras, PipelineExtras,
+    Round8, Round9, Round11, Round12, Round13, Round15, Round16, Round17,
+    Round18)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-      graft.queries.Parsing.queries ++
-      graft.queries.Enrichment.queries ++
-      graft.queries.Sharded.queries ++
-      graft.queries.LlmPipeline.queries ++
-      graft.queries.EventQueries.queries ++
-      graft.queries.CorpusExtras.queries ++
-      graft.queries.PipelineExtras.queries ++
-      graft.queries.Round8.queries ++
-      graft.queries.Round9.queries ++
-      graft.queries.Round11.queries ++
-      graft.queries.Round12.queries ++
-      graft.queries.Round13.queries ++
-      graft.queries.Round15.queries ++
-      graft.queries.Round16.queries ++
-      graft.queries.Round17.queries ++
-      graft.queries.Round18.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    union(modules.map(_.queries))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracles ++
-      graft.queries.Parsing.oracles ++
-      graft.queries.Enrichment.oracles ++
-      graft.queries.Sharded.oracles ++
-      graft.queries.LlmPipeline.oracles ++
-      graft.queries.EventQueries.oracles ++
-      graft.queries.CorpusExtras.oracles ++
-      graft.queries.PipelineExtras.oracles ++
-      graft.queries.Round8.oracles ++
-      graft.queries.Round9.oracles ++
-      graft.queries.Round11.oracles ++
-      graft.queries.Round12.oracles ++
-      graft.queries.Round13.oracles ++
-      graft.queries.Round15.oracles ++
-      graft.queries.Round16.oracles ++
-      graft.queries.Round17.oracles ++
-      graft.queries.Round18.oracles
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] = union(modules.map(_.oracles))
+
+  /** Queries whose oracle reads their own result back (see
+    * [[QueryModule.oracleInputCopies]]). */
+  lazy val oracleInputCopies: Set[String] =
+    modules.flatMap(_.oracleInputCopies).toSet
+
+  /** Merges per-module maps; a name registered twice is an error, not a
+    * silent overwrite. */
+  private[graft] def union[V](maps: Seq[Map[String, V]]): Map[String, V] =
+    maps.foldLeft(Map.empty[String, V]) { (acc, m) =>
+      val dup = acc.keySet.intersect(m.keySet)
+      require(dup.isEmpty, s"query names registered twice: ${dup.mkString(", ")}")
+      acc ++ m
+    }
 }

@@ -87,14 +87,31 @@ object Tables {
     * shuffle moves a few MB to unlock full-width map stages; production
     * sources (Kafka partitions, multi-file lakes) are already split, so
     * operators themselves never force this. */
-  def parallel(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = apply(spark, dir, name)
-    val target = spark.sparkContext.defaultParallelism
+  def parallel(spark: SparkSession, dir: String, name: String): DataFrame =
+    spreadFiles(apply(spark, dir, name))
+
+  /** [[parallel]]'s fan-out for any file scan of one-row-group files:
+    * repartition to the context's default parallelism when there are
+    * fewer files than that. */
+  def spreadFiles(df: DataFrame): DataFrame = {
+    val target = df.sparkSession.sparkContext.defaultParallelism
     // inputFiles is pure metadata (no RDD conversion / physical planning);
-    // each testdata file is one unsplittable row-group, so file count ==
-    // scan partition count here.
+    // each file is one unsplittable row-group, so file count == scan
+    // partition count here.
     if (df.inputFiles.length < target) df.repartition(target) else df
   }
+
+  /** Round-robin respread to the session's shuffle parallelism, for
+    * small-row intermediates that feed compute-dense work — the candidate
+    * pairs before an exact-verify join. AQE coalesces shuffle output by
+    * bytes, so a distinct's exchange of 16-byte pair rows collapses to one
+    * or two partitions and the per-pair verify runs nearly serial
+    * (measured 4.5 s single-task vs 0.2 s spread on JaccardJoin's
+    * verify). It must be round-robin with a pinned count: a hash
+    * repartition on the pair ids is elided as a no-op against the
+    * distinct's own partitioning, whose exchange is then coalesced again. */
+  def respread(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
 
   /** `localCheckpoint()` + compute-parallelism repair: AQE coalesces
     * shuffle output by BYTES (with `parallelismFirst` the target is
@@ -115,15 +132,15 @@ object Tables {
     * consumers ~0.2 s (their stop-gram collect job and main job cannot
     * share the exchange) but costs the MinHash corpusVerdict paths
     * 0.3-0.4 s of extra build-time materialization jobs (q38/q41) — net
-    * negative, so the lazy respread stays. Width source of truth is the
-    * session's shuffle parallelism, same as IncrementalDedup's candidate
-    * respread (r19 ADVICE: the two respread sites targeted different
-    * knobs), read via `queryExecution.toRdd` so the width probe doesn't
-    * plan a DataFrame-to-RDD conversion (r19 ADVICE). */
+    * negative, so the lazy respread stays. The width is [[respread]]'s,
+    * the session's shuffle parallelism; the partition count is read via
+    * `queryExecution.toRdd` so the width probe doesn't plan a
+    * DataFrame-to-RDD conversion (r19 ADVICE). */
   def localCheckpointWide(df: DataFrame): DataFrame = {
     val ck = df.localCheckpoint()
-    val p = ck.sparkSession.sessionState.conf.numShufflePartitions
-    if (ck.queryExecution.toRdd.getNumPartitions < p) ck.repartition(p) else ck
+    if (ck.queryExecution.toRdd.getNumPartitions <
+        ck.sparkSession.sessionState.conf.numShufflePartitions) respread(ck)
+    else ck
   }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {

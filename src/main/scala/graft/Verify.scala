@@ -13,9 +13,7 @@ object Verify {
     val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val copies = (graft.queries.LlmPipeline.oracleInputCopies ++
-      graft.queries.CorpusExtras.oracleInputCopies ++
-      graft.queries.Round8.oracleInputCopies).toSet
+    val copies = SparkEntry.oracleInputCopies
     val copyDir = graft.queries.LlmPipeline.oracleInputDir
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

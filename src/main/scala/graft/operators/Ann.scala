@@ -162,13 +162,8 @@ object Ann {
     val cands = MinHashLsh.candidatePairs(buckets)
     val a = corpus.select(col(idCol).as("id_a"), toDoubleArray(col(vecCol)).as("__va"))
     val b = corpus.select(col(idCol).as("id_b"), toDoubleArray(col(vecCol)).as("__vb"))
-    val nPart = corpus.sparkSession.sessionState.conf.numShufflePartitions
-    // candidate respread before the vector joins + exact-cosine verify,
-    // same rationale as MinHashLsh/JaccardJoin.nearDupPairs: AQE
-    // coalesces the 16-byte pair rows to one partition and the verify
-    // (a per-pair fused cosine over full vectors) would run serial
-    cands
-      .repartition(nPart)
+    // respread: the verify is a per-pair fused cosine over full vectors
+    graft.Tables.respread(cands)
       .join(a, "id_a").join(b, "id_b")
       .withColumn("cos", round(cosine(col("__va"), col("__vb")), 6))
       .filter(col("cos") >= minCos)
@@ -238,7 +233,7 @@ object Ann {
       }
     }
     // the checkpointed sample's blocks are released by the callers'
-    // standard between-query leftover release (Bench/TimeQ/Verify);
+    // standard between-query leftover release (Bench/Verify/ProfileStages);
     // nothing to unpersist here — localCheckpoint blocks cannot be
     // dropped while derived plans might still re-execute
     cents

@@ -131,9 +131,7 @@ object ContainmentJoin {
       .distinct()
     val rawA = docs.select(col(idCol).as("id_a"), col(textCol).as("__t_a"))
     val rawB = docs.select(col(idCol).as("id_b"), col(textCol).as("__t_b"))
-    val nPart = docs.sparkSession.sessionState.conf.numShufflePartitions
-    cands
-      .repartition(nPart)
+    graft.Tables.respread(cands)
       .join(rawA, "id_a").join(rawB, "id_b")
       .select(col("id_a"), col("id_b"),
         ColumnBridge.col(graft.functions.ShingleContainment(

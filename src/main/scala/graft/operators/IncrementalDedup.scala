@@ -426,22 +426,15 @@ object IncrementalDedup {
       .join(exact, Seq("__nid"), "left_anti")
     val sig = ColumnBridge.col(graft.functions.MinHashTextSignature(
       ColumnBridge.expr(col("__t_new")), shingleK, numHashes))
-    // candidates re-spread before verification (r19; the JaccardJoin /
-    // ContainmentJoin pattern): AQE coalesces the 16-byte candidate
-    // pairs to 1-2 partitions and the per-pair exact-Jaccard verify —
-    // the probe's most compute-dense stage — would run nearly serial
-    // (r19 stage profile: two ~1 s 2-task stages). Round-robin
-    // REPARTITION_BY_NUM with a pinned count, because a hash
-    // repartition on the ids is elided as a no-op and the distinct's
-    // own exchange is then AQE-coalesced again.
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val cands = MinHashLsh
+    // candidates respread before verification (r19 stage profile: without
+    // it the probe's per-pair exact-Jaccard verify ran as two ~1 s 2-task
+    // stages)
+    val cands = graft.Tables.respread(MinHashLsh
       .bandBuckets(survivors, col("__nid"), sig, numHashes, bands)
       .join(readTable(spark, path, "bands", numBuckets),
         col("__band") === col("band") && col("__bucket") === col("bucket"))
       .select(col("__id").as("__nid"), col("doc_id").as("__oid"))
-      .distinct()
-      .repartition(nPart)
+      .distinct())
     val near = cands
       .join(survivors, "__nid")
       .join(history.select(col(idCol).as("__oid"),

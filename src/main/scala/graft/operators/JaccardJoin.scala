@@ -151,14 +151,7 @@ object JaccardJoin {
       .distinct()
     val rawA = docs.select(col(idCol).as("id_a"), col(textCol).as("__t_a"))
     val rawB = docs.select(col(idCol).as("id_b"), col(textCol).as("__t_b"))
-    val nPart = docs.sparkSession.sessionState.conf.numShufflePartitions
-    // Round-robin REPARTITION_BY_NUM specifically: a hash repartition on
-    // (id_a, id_b) is elided as a no-op (the distinct already hash-
-    // partitioned on those keys) and the distinct's own exchange is then
-    // AQE-coalesced to ONE partition (16-byte rows look tiny), which
-    // serializes the verify — measured 4.5 s single-task vs 0.2 s spread.
-    cands
-      .repartition(nPart)
+    graft.Tables.respread(cands)
       .join(rawA, "id_a").join(rawB, "id_b")
       .select(col("id_a"), col("id_b"),
         MinHashLsh.shingleJaccard(col("__t_a"), col("__t_b"), k).as("jaccard"))

@@ -113,18 +113,10 @@ object MinHashLsh {
       bandBuckets(docs, col(idCol), sig, numHashes, bands))
     val rawA = docs.select(col(idCol).as("id_a"), col(textCol).as("__t_a"))
     val rawB = docs.select(col(idCol).as("id_b"), col(textCol).as("__t_b"))
-    val nPart = docs.sparkSession.sessionState.conf.numShufflePartitions
-    // Round-robin REPARTITION_BY_NUM before the verify joins — the same
-    // respread JaccardJoin.nearDupPairs carries (r20: this path was
-    // missing it): the distinct's exchange output is 16-byte pair rows,
-    // which AQE coalesces to ONE partition, serializing the per-pair
-    // exact-Jaccard verify (q38 stage profile: the ClusterDedup pair
-    // checkpoint's verify stage ran 1 task, 0.56 s of a ~2 s row). A
-    // hash repartition on the pair ids would be elided as a no-op
-    // against the distinct's partitioning, so it must be round-robin
-    // with a pinned count.
-    cands
-      .repartition(nPart)
+    // candidates respread before the verify joins (q38 stage profile:
+    // without it the ClusterDedup pair checkpoint's verify stage ran 1
+    // task, 0.56 s of a ~2 s row)
+    graft.Tables.respread(cands)
       .join(rawA, "id_a").join(rawB, "id_b")
       .select(col("id_a"), col("id_b"),
         shingleJaccard(col("__t_a"), col("__t_b"), shingleK).as("jaccard"))

@@ -11,7 +11,7 @@ import graft.functions.ColumnBridge
   * [[LlmPipeline]] only for file size; same conventions (shared
   * literals between Spark and oracle SQL, read-back oracles where a
   * sketch's content is run-dependent). */
-object CorpusExtras {
+object CorpusExtras extends QueryModule {
 
   /** q57's unicode plant, keyed by doc_id % 4: decomposed accents (NFC
     * composes), compatibility-composed U+212B (NFC maps to U+00C5),
@@ -103,9 +103,7 @@ object CorpusExtras {
         snippetCorpus(s, dir), "doc_id", "text", k = 3, minContainment = 0.9)
       .orderBy("id_a", "id_b")
 
-  /** Read-back oracles of this module (see [[LlmPipeline.oracleInputCopies]]
-    * for the pattern; [[graft.Verify]] unions the two lists). */
-  val oracleInputCopies: Seq[String] = Seq("q58_topk_sketch")
+  override val oracleInputCopies: Seq[String] = Seq("q58_topk_sketch")
 
   private def readBack(name: String): String =
     s"read_parquet('${LlmPipeline.oracleInputDir}/$name.parquet/*.parquet')"

@@ -13,7 +13,7 @@ import graft.enrich.{ClassNormalize, IpEnrich, IpRange}
   * oracle can recompute them and verify via a plain range join — the Spark
   * side goes through the real string→aton→binsearch path.
   */
-object Enrichment {
+object Enrichment extends QueryModule {
 
   /** Deterministic range table from `nation` (25 ranges × 40M addresses):
     * nation 0 is a LAN entry (同一内部网 → 局域网), every third nation has

@@ -13,7 +13,7 @@ import graft.operators.{EventAnalytics, SequenceMatch}
   * same semantics in DuckDB window SQL over exact integer microseconds
   * (`epoch_us` both sides — the test data is micro-precise, so the
   * ns→µs conversion in [[graft.Tables]] is lossless). */
-object EventQueries {
+object EventQueries extends QueryModule {
 
   /** 8 h inactivity gap: sparse synthetic traffic (~2.2 events/user/day)
     * still yields multi-event sessions at this gap. */

@@ -17,7 +17,7 @@ import graft.operators.{Ann, Bm25, Contamination, CorpusMix, DedupPipeline, DupS
   * word; id + 1,000,000) — reproducible on the DuckDB side — so the
   * near-dup output is non-vacuous and every pipeline stage is exercised.
   */
-object LlmPipeline {
+object LlmPipeline extends QueryModule {
 
   /** documents ∪ first-word-dropped copies of the longer docs. */
   private[queries] def augmentedDocs(s: SparkSession, dir: String): DataFrame = {
@@ -870,12 +870,10 @@ object LlmPipeline {
         nShards = 32, seed = 42L)
       .orderBy("shard", "pos")
 
-  /** Queries whose oracle reads the query's own output back and
-    * re-derives the SQL-expressible part from the raw tables. */
-  val oracleInputCopies: Seq[String] =
+  override val oracleInputCopies: Seq[String] =
     Seq("q24_simhash_neardup", "q28_ivf_ann", "q31_winnow_neardup",
-      "q42_quantiles_approx", "q45_distinct_approx", "q47_semantic_dedup",
-      "q53_reshard", "q67_pq_ann", "q74_tdigest_quantiles")
+      "q45_distinct_approx", "q47_semantic_dedup", "q53_reshard",
+      "q67_pq_ann")
 
   private def readBack(name: String): String =
     s"read_parquet('$oracleInputDir/$name.parquet/*.parquet')"

@@ -65,7 +65,7 @@ object MediaPlantCache {
 
   /** Serve `name`'s plant from the warehouse cache, building (and
     * persisting) it on first use for this (sf, code fingerprint).
-    * The read is re-spread to the session parallelism the same way
+    * The read is re-spread by [[graft.Tables.spreadFiles]], the same way
     * [[graft.Tables.parallel]] spreads the unsplittable testdata
     * files — the downstream decode is per-row expensive. */
   def cached(s: SparkSession, sfDir: String, name: String)
@@ -88,9 +88,7 @@ object MediaPlantCache {
       }
       build.write.mode("overwrite").parquet(dir.toString)
     }
-    val df = s.read.parquet(dir.toString)
-    val target = s.sparkContext.defaultParallelism
-    if (df.inputFiles.length < target) df.repartition(target) else df
+    graft.Tables.spreadFiles(s.read.parquet(dir.toString))
   }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {

@@ -20,7 +20,7 @@ import graft.sources.{MessageParser, ParserConfig}
   * embarrassingly parallel with no shuffle — the only shuffle here is the
   * final presentation ORDER BY, which real pipelines don't have.
   */
-object Parsing {
+object Parsing extends QueryModule {
 
   private def cfg = ParserConfig(format = "json", timeUnit = 1.0, timeZone = "UTC")
 

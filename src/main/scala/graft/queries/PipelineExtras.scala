@@ -9,7 +9,7 @@ import graft.Tables
 /** Round-7 pipeline operators: per-key quotas, time-series gap fill,
   * and incrementally-maintained aggregates. Same conventions as
   * [[CorpusExtras]] (shared literals between Spark and oracle SQL). */
-object PipelineExtras {
+object PipelineExtras extends QueryModule {
 
   private def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 4))).cast("double")
 

@@ -25,7 +25,7 @@ import graft.Tables
   *  - count()s stay BIGINT on both sides (DuckDB sum(BIGINT) would be
   *    HUGEINT, so sums of ints are cast explicitly).
   */
-object Relational {
+object Relational extends QueryModule {
 
   /** Order-insensitive exact sum of a double column: accumulate as decimal. */
   private def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 4))).cast("double")
@@ -269,6 +269,9 @@ object Relational {
         rightCols = Seq("prev_purchase_id", "prev_value"))
       .orderBy("click_id")
   }
+
+  override val oracleInputCopies: Seq[String] =
+    Seq("q42_quantiles_approx", "q74_tdigest_quantiles")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_agg_pushdown" -> q01AggPushdown _,

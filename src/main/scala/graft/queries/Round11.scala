@@ -11,7 +11,7 @@ import graft.operators.{ImageDedup, JpegBuild, Multimodal, VideoDedup}
   * (q108) and the media quarantine-reason census (q109) — plus the
   * gate for the round-11 baseline-JPEG pixel path (directive #8),
   * q110. */
-object Round11 {
+object Round11 extends QueryModule {
 
   /** q108: ORDER-SENSITIVE video near-dup vs the order-insensitive
     * temporal-mean hash, on one planted population — the two forms'

@@ -9,7 +9,7 @@ import graft.operators.WebpPixels.WebpBuild
 
 /** Round-12 gate: the VP8L (lossless WEBP) pixel path — the one
   * remaining slice of the COVERAGE.md media-scope decision. */
-object Round12 {
+object Round12 extends QueryModule {
 
   /** q112: VP8L content near-dup — the [[graft.operators.WebpPixels]]
     * decode feeding the same dHash + Hamming-band machinery as

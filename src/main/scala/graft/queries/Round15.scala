@@ -26,7 +26,7 @@ import graft.Tables
   * plant and scans ALL pairs, so the blocking layer must stay lossless
   * under skew, not merely fast.
   */
-object Round15 {
+object Round15 extends QueryModule {
 
   /** The boilerplate banner. 12 words → 10 internal trigrams, every
     * one out of the corpus vocabulary, so hotness is exactly the

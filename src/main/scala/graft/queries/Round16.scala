@@ -29,7 +29,7 @@ import graft.Tables
   * scans all representative pairs — so the composition must stay
   * lossless, not merely fast.
   */
-object Round16 {
+object Round16 extends QueryModule {
 
   private val header = Round15.header
   /** Banner minus its last word — still every gram hot. */

@@ -17,7 +17,7 @@ import graft.operators.{ContainmentJoin, JaccardJoin, StopGrams}
   * so these gates pin the fallback's correctness in
   * CORRECTNESS_r{N}.json at whatever scale the driver runs.
   */
-object Round17 {
+object Round17 extends QueryModule {
 
   /** 1 KiB = 64 stop-gram entries: bound by construction on every sf
     * (the sf0.01 corpus alone has thousands of df≥2 trigrams), so the

@@ -34,7 +34,7 @@ import graft.operators.{ContainmentJoin, JaccardJoin, StopGrams}
   * AQE's skew reader fired); PLANS.md "Bind×skew decomposition"
   * records the curve and names the mechanism from those numbers.
   */
-object Round18 {
+object Round18 extends QueryModule {
 
   /** q120: q114's Zipf-hot Jaccard self-join forced through the bind
     * (Round17.BindBudgetBytes = 1 KiB = 64 stop-gram entries; the

@@ -10,7 +10,7 @@ import graft.Tables
   * battery. Same conventions as the other families: shared literals
   * between the Spark side and the oracle SQL, every query totally
   * ordered, int outputs cast BIGINT on both sides. */
-object Round8 {
+object Round8 extends QueryModule {
 
   /** q75's threshold: planted near-dup doc pairs sit at head edit
     * distance <= 4 while unrelated word-salad pairs start at ~37
@@ -390,10 +390,6 @@ object Round8 {
         coalesce(col("lvl_increase"), lit(0)).as("lvl_increase"))
       .orderBy("user_id")
   }
-
-  /** Read-back oracles of this module (see
-    * [[LlmPipeline.oracleInputCopies]] for the mechanism). */
-  val oracleInputCopies: Seq[String] = Seq.empty
 
   /** q95: the full `sequenceNextNode` direction/base surface over the
     * signup→view chain ([[graft.operators.EventAnalytics

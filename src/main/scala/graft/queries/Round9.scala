@@ -8,7 +8,7 @@ import graft.operators.{ImageDedup, Multimodal}
 
 /** Round-9 queries: content-level image near-duplicate detection — the
   * pixel-level companion to q26's container-header plumbing. */
-object Round9 {
+object Round9 extends QueryModule {
 
   /** q102 plant geometry: base images are 18×16 px (2×2-px cells on the
     * 9×8 dHash grid), scaled copies 36×32 (4×4 cells) — grid-aligned,

@@ -12,7 +12,7 @@ import graft.operators.Sharding
   * arithmetically. The hash policy has no SQL equivalent (xxhash64 seed 0)
   * and is pinned by ShardingSpec unit vectors instead.
   */
-object Sharded {
+object Sharded extends QueryModule {
 
   def q17ShardDistribution(s: SparkSession, dir: String): DataFrame = {
     val events = Tables(s, dir, "events")

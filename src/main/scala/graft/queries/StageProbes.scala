@@ -9,8 +9,8 @@ import graft.operators.MinHashLsh
 /** Stage decompositions for ScaleBench rows that have earned one (r18
   * judge directive #5): each entry names PREFIX sub-pipelines of the
   * row's own plan, which ScaleBench times at BOTH scales right after
-  * the row and ships in-artifact as `stage_decomp` — the ProfileQ50
-  * treatment, but as a SELF-CLASSIFYING ARTIFACT FIELD instead of a
+  * the row and ships in-artifact as `stage_decomp` — a per-stage
+  * decomposition, but as a SELF-CLASSIFYING ARTIFACT FIELD instead of a
   * PLANS prose paragraph, re-measured mechanically on every sweep.
   *
   * Reading a decomposition: each stage's sf1/sf0.1 ratio brackets where
