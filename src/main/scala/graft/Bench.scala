@@ -393,8 +393,8 @@ object Bench {
     val streamSchema = spark.read.parquet(streamIn).schema
     // gate=false drops the stateful-dedup stage: the same pipeline at
     // its fixed 8-trigger cadence floor, isolating what the state
-    // store actually costs (the StreamGateProbe decomposition, now
-    // recorded IN the artifact — r13 judge directive #5)
+    // store actually costs (the gate/no-gate split is recorded in the
+    // bench artifact)
     def streamOnce(pass: Int, gate: Boolean = true): Double = {
       import org.apache.spark.sql.functions._
       val out = s"$streamBase/out$pass"; val ck = s"$streamBase/ck$pass"
@@ -418,9 +418,7 @@ object Bench {
       val rowsPerTrigger = STREAM_ROWS * 2 / 16
       val t0 = System.nanoTime()
       // the TTL-0 exact gate rides the NATIVE streaming dedup operator
-      // (same state store, no object shuffle) — see firstSeenExact's doc;
-      // the TTL/observability variant firstSeen is benched by
-      // tools/StateStoreBench
+      // (same state store, no object shuffle) — see firstSeenExact's doc
       graft.streaming.StatefulDedup.withStatePartitions(
           spark, graft.streaming.StatefulDedup.statePartitionsFor(rowsPerTrigger)) {
         (if (gate) graft.streaming.StatefulDedup.firstSeenExact(admitted, "fp")

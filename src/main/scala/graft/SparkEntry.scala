@@ -17,31 +17,33 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.queries.Relational.q01AggPushdown(spark, "/root/testdata/sf0.001")
 
-  /** Every query module; each query name is registered by exactly one. */
-  val modules: Seq[QueryModule] = Seq(Relational, Parsing, Enrichment,
-    Sharded, LlmPipeline, EventQueries, CorpusExtras, PipelineExtras,
-    Round8, Round9, Round11, Round12, Round13, Round15, Round16, Round17,
-    Round18)
+  /** Every query module, one per domain. */
+  val modules: Seq[QueryModule] = Seq(Relational, Ingest, Events, Stats,
+    Corpus, Retrieval, Media)
+
+  /** Every module's entries by name; a name declared twice is an error. */
+  private lazy val entries: Map[String, Query] =
+    union(modules.flatMap(_.entries))
 
   /** One entry per implemented operator from SURVEY.md §2. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    union(modules.map(_.queries))
+    entries.map { case (k, q) => k -> q.build }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. */
-  lazy val oracleSql: Map[String, String] = union(modules.map(_.oracles))
+  lazy val oracleSql: Map[String, String] =
+    entries.map { case (k, q) => k -> q.oracle }
 
   /** Queries whose oracle reads their own result back (see
-    * [[QueryModule.oracleInputCopies]]). */
+    * [[Query.readBack]]). */
   lazy val oracleInputCopies: Set[String] =
-    modules.flatMap(_.oracleInputCopies).toSet
+    entries.collect { case (k, q) if q.readBack => k }.toSet
 
-  /** Merges per-module maps; a name registered twice is an error, not a
+  /** Keys entries by name; a name registered twice is an error, not a
     * silent overwrite. */
-  private[graft] def union[V](maps: Seq[Map[String, V]]): Map[String, V] =
-    maps.foldLeft(Map.empty[String, V]) { (acc, m) =>
-      val dup = acc.keySet.intersect(m.keySet)
-      require(dup.isEmpty, s"query names registered twice: ${dup.mkString(", ")}")
-      acc ++ m
-    }
+  private[graft] def union(qs: Seq[Query]): Map[String, Query] = {
+    val dup = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dup.isEmpty, s"query names registered twice: ${dup.mkString(", ")}")
+    qs.map(q => q.name -> q).toMap
+  }
 }

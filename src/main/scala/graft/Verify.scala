@@ -14,7 +14,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val copies = SparkEntry.oracleInputCopies
-    val copyDir = graft.queries.LlmPipeline.oracleInputDir
+    val copyDir = graft.queries.Query.oracleInputDir
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>

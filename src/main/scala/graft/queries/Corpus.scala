@@ -6,18 +6,20 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{ColumnBridge, Hashes}
-import graft.operators.{Ann, Bm25, Contamination, CorpusMix, DedupPipeline, DupSpans, JaccardJoin, MinHashLsh, Multimodal, Pq, SemanticDedup, SeqPack, SimHash}
+import graft.operators.{Ann, ContainmentJoin, Contamination, CorpusMix, DedupPipeline, DupSpans, JaccardJoin, MinHashLsh, SemanticDedup, SeqPack, SimHash, StopGrams}
 
-/** Training-data-pipeline operators over `documents` / `embeddings`
-  * (deduplication, similarity search, text analysis, multimodal plumbing),
-  * each oracle-checked where SQL-expressible.
+/** Training-corpus curation and deduplication over `documents` /
+  * `embeddings`: exact, MinHash, SimHash, winnowing, embedding, Jaccard,
+  * containment and edit-distance near-dup detection, text quality and
+  * PII stages, corpus mixing, packing and resharding, each oracle-checked
+  * where SQL-expressible.
   *
   * The synthetic corpus has no true near-duplicates, so the dedup queries
   * first augment it with deterministic perturbed copies (drop the first
   * word; id + 1,000,000) — reproducible on the DuckDB side — so the
   * near-dup output is non-vacuous and every pipeline stage is exercised.
   */
-object LlmPipeline extends QueryModule {
+object Corpus extends QueryModule {
 
   /** documents ∪ first-word-dropped copies of the longer docs. */
   private[queries] def augmentedDocs(s: SparkSession, dir: String): DataFrame = {
@@ -47,16 +49,6 @@ object LlmPipeline extends QueryModule {
     // gate is row-order-insensitive.
     MinHashLsh.nearDupPairs(augmentedDocs(s, dir), "doc_id", "text",
         shingleK = 3, numHashes = 64, bands = 32, minJaccard = 0.8)
-
-  /** q19: exact brute-force cosine top-k for 10 query vectors —
-    * broadcast queries, one corpus pass, per-query top-k. The ANN/LSH
-    * variant is [[graft.operators.Ann.lshTopK]] (AnnSpec pins its recall
-    * against this baseline). */
-  def q19AnnTopK(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.parallel(s, dir, "embeddings")
-    Ann.bruteForceTopK(emb, emb.filter(col("vec_id") < 10),
-        "vec_id", "embedding", k = 10)
-  }
 
   /** Occurrences of a space-padded keyword via replace-length arithmetic
     * (identical non-overlapping left-to-right semantics in Spark and
@@ -277,102 +269,6 @@ object LlmPipeline extends QueryModule {
       .select("id_a", "id_b", "label", "cos")
   }
 
-  /** q26: multimodal plumbing + REAL image-header decode. Three payload
-    * populations: the documents' text lifted into opaque binary (no
-    * recognizable container → deterministic stub branch, status
-    * 'opaque'); planted single-frame stills (+1M ids) — genuine
-    * PNG/JPEG/GIF/BMP/WEBP/TIFF binary containers built at runtime with
-    * dimensions derived from doc_id
-    * ([[graft.operators.Multimodal.MediaBuild]]), which the decoder
-    * must parse back from the actual bytes (magic, BE/LE dimension
-    * fields, JPEG marker walk, VP8X 24-bit canvas, TIFF IFD walk); and
-    * planted CORRUPT payloads (+2M ids) — real container signatures
-    * with broken bodies, which must land in the 'quarantined' status
-    * with zeroed dims, surviving the stage rather than throwing. The
-    * oracle re-derives everything arithmetically from doc_id, so any
-    * endianness/offset bug or a corrupt row killing the job fails the
-    * gate. */
-  def q26MediaMeta(s: SparkSession, dir: String): DataFrame = {
-    implicit val sp: SparkSession = s
-    import s.implicits._
-    val docs = Tables.parallel(s, dir, "documents")
-    val media = Multimodal.asMedia(docs, "doc_id", "text", "image")
-    val fmts = Multimodal.MediaBuild.Formats
-    val planted = docs.select(col("doc_id")).as[Long].map { id =>
-      val w = (id % 640L).toInt + 1
-      val h = (id % 480L).toInt + 1
-      val payload = fmts((id % 6L).toInt) match {
-        case "png" => Multimodal.MediaBuild.png(w, h)
-        case "jpeg" => Multimodal.MediaBuild.jpeg(w, h)
-        case "gif" => Multimodal.MediaBuild.gif(w, h)
-        case "bmp" => Multimodal.MediaBuild.bmp(w, h)
-        case "webp" => Multimodal.MediaBuild.webp(w, h)
-        case _ => Multimodal.MediaBuild.tiff(w, h)
-      }
-      Multimodal.MediaRecord(id + 1000000L, "image", payload)
-    }
-    val corrupt = docs.select(col("doc_id")).as[Long].map { id =>
-      Multimodal.MediaRecord(id + 2000000L, "image",
-        Multimodal.MediaBuild.corrupt(fmts((id % 6L).toInt)))
-    }
-    Multimodal.decodeMeta(media.union(planted).union(corrupt)).toDF()
-      .select("media_id", "kind", "size_bytes", "width", "height",
-        "n_frames", "first_frame_offset", "status")
-  }
-
-  /** q28: IVF approximate cosine top-k — coarse-quantizer training on a
-    * deterministic sample, map-only cell assignment, probe-join search.
-    *
-    * Oracle: read-back. Which neighbors IVF returns depends on the
-    * trained centroids (not SQL-expressible; recall vs the exact q19
-    * baseline is pinned by AnnSpec), but the returned rows themselves
-    * are fully checkable: DuckDB reads the result back from a fixed
-    * path, recomputes every pair's cosine from the raw `embeddings`
-    * table, and re-derives `rank` from the recomputed scores — a wrong
-    * score, a fabricated id (join drops it), or a non-monotonic ranking
-    * all break the hash compare. */
-  def q28IvfAnn(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.parallel(s, dir, "embeddings")
-    Ann.ivfTopK(emb, emb.filter(col("vec_id") < 10),
-      "vec_id", "embedding", k = 10, nCells = 16, nProbe = 8)
-  }
-
-  /** q67: product-quantization ANN ([[graft.operators.Pq]]) — the
-    * memory-compressed corpus path: vectors encoded to m=16 codes once,
-    * the ADC scan shortlists 64 candidates per query over CODES only
-    * (the float corpus is never scanned at query time; PqSpec measures
-    * shortlist-64 recall of the exact top-10 at 0.94), and the exact
-    * cosine rerank joins raw vectors for the shortlist alone — the
-    * standard IVF-PQ deployment shape at 100 TB.
-    *
-    * Oracle: read-back, exactly q28's contract — which candidates the
-    * codes shortlist depends on the trained codebooks (not
-    * SQL-expressible; recall is pinned by PqSpec), but every returned
-    * row is checkable: DuckDB recomputes each pair's cosine from the
-    * raw table and re-derives `rank`, so a wrong score, fabricated id,
-    * or ADC-ordered (instead of rerank-ordered) output breaks the
-    * compare. */
-  def q67PqAnn(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.parallel(s, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 10)
-    val cb = Pq.train(emb, "vec_id", "embedding", m = 16, ksub = 16)
-    val codes = Pq.encode(emb, "vec_id", "embedding", cb)
-    val shortlist = Pq.adcTopK(codes, queries, "vec_id", "embedding", cb, k = 64)
-    val vecs = emb.select(col("vec_id"),
-      Ann.toDoubleArray(col("embedding")).as("__v"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("nn_id").asc)
-    shortlist
-      .join(vecs.withColumnRenamed("vec_id", "nn_id")
-        .withColumnRenamed("__v", "__vc"), "nn_id")
-      .join(broadcast(queries.select(col("vec_id").as("q_id"),
-        Ann.toDoubleArray(col("embedding")).as("__vq"))), "q_id")
-      .withColumn("cos", round(Ann.cosine(col("__vq"), col("__vc")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 10)
-      .select("q_id", "rank", "nn_id", "cos")
-  }
-
   /** q31: winnowing (rolling-hash) near-dup candidates — the MOSS-style
     * third blocking scheme next to MinHash (q18) and SimHash (q24): any
     * pair sharing a substring of ≥ window+k-1 chars shares a
@@ -437,11 +333,6 @@ object LlmPipeline extends QueryModule {
     val pairs = q18MinhashNearDup(s, dir).select("id_a", "id_b")
     graft.operators.ClusterDedup.clusterReps(pairs)
   }
-
-  /** Fixed location Verify copies selected results to, so read-back
-    * oracles (q24/q28/q31) can reference a stable absolute path — the
-    * driver chooses its own outDir, which the oracle SQL can't see. */
-  val oracleInputDir = "/root/repo/target/oracle_inputs"
 
   /** q37: benchmark decontamination — distinct 4-word-gram overlap of
     * every training-split doc (doc_id % 20 != 0) against the held-out
@@ -736,28 +627,6 @@ object LlmPipeline extends QueryModule {
       .orderBy("vec_id")
   }
 
-  /** The q48 query set — shared literal fixture for the Spark side and
-    * the oracle's VALUES list. Terms span the corpus idf range ('dup'
-    * is the rarest corpus term; the rest are mid/high-df). */
-  val bm25Queries: Seq[(Int, String)] = Seq(
-    0 -> "hash join batch",
-    1 -> "slow query scan",
-    2 -> "dup vector window")
-
-  /** q48: BM25 ranked retrieval over the documents table
-    * ([[graft.operators.Bm25]]) — top-10 docs for each of three fixed
-    * queries. Fully SQL-expressible oracle: DuckDB re-derives tf, df,
-    * dl, the corpus stats, the Okapi formula (identical `+1` idf form),
-    * the DECIMAL-accumulated per-doc sum, and the rounded-score ranking
-    * from the raw table. */
-  def q48Bm25TopK(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = Tables.parallel(s, dir, "documents")
-    Bm25.search(docs, "doc_id", "text",
-        bm25Queries.toDF("q_id", "q_text"), "q_id", "q_text", k = 10)
-      .orderBy("q_id", "rank")
-  }
-
   /** q49: exact duplicate-span profile ([[graft.operators.DupSpans]],
     * the Lee-et-al. exact-substring dedup semantics): per augmented doc,
     * the maximal merged spans of tokens covered by a 10-gram occurring
@@ -783,6 +652,7 @@ object LlmPipeline extends QueryModule {
     * tertiles ≈ 3.37–3.41) so all three tiers are populated at every
     * scale factor. */
   val perplexityHeadMax = 3.39
+
   val perplexityMiddleMax = 3.41
 
   /** q50: CCNet-shape perplexity quality scoring
@@ -831,6 +701,7 @@ object LlmPipeline extends QueryModule {
     * daily probe, not the one-time index build it amortizes. */
   private val incrementalIndexes =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
+
   private def incrementalIndexFor(
       s: SparkSession, dir: String, hist: DataFrame): String =
     incrementalIndexes.computeIfAbsent(dir, { _ =>
@@ -870,51 +741,9 @@ object LlmPipeline extends QueryModule {
         nShards = 32, seed = 42L)
       .orderBy("shard", "pos")
 
-  override val oracleInputCopies: Seq[String] =
-    Seq("q24_simhash_neardup", "q28_ivf_ann", "q31_winnow_neardup",
-      "q45_distinct_approx", "q47_semantic_dedup", "q53_reshard",
-      "q67_pq_ann")
-
-  private def readBack(name: String): String =
-    s"read_parquet('$oracleInputDir/$name.parquet/*.parquet')"
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q18_minhash_neardup" -> q18MinhashNearDup _,
-    "q28_ivf_ann" -> q28IvfAnn _,
-    "q67_pq_ann" -> q67PqAnn _,
-    "q31_winnow_neardup" -> q31WinnowNearDup _,
-    "q19_ann_topk" -> q19AnnTopK _,
-    "q20_lang_id" -> q20LangId _,
-    "q21_text_quality" -> q21TextQuality _,
-    "q22_token_count" -> q22TokenCount _,
-    "q23_fingerprint" -> q23Fingerprint _,
-    "q24_simhash_neardup" -> q24SimhashNearDup _,
-    "q25_embed_neardup" -> q25EmbedNearDup _,
-    "q26_media_meta" -> q26MediaMeta _,
-    "q32_cluster_dedup" -> q32ClusterDedup _,
-    "q33_embed_neardup_lsh" -> q33EmbedNearDupLsh _,
-    "q35_repetition" -> q35Repetition _,
-    "q36_pii_extract" -> q36PiiExtract _,
-    "q37_contamination" -> q37Contamination _,
-    "q38_dedup_corpus" -> q38DedupCorpus _,
-    "q39_corpus_mix" -> q39CorpusMix _,
-    "q40_quality_filter" -> q40QualityFilter _,
-    "q41_corpus_build" -> q41CorpusBuild _,
-    "q43_jaccard_neardup" -> q43JaccardNearDup _,
-    "q44_seq_pack" -> q44SeqPack _,
-    "q45_distinct_approx" -> q45DistinctApprox _,
-    "q46_corpus_pack" -> q46CorpusPack _,
-    "q47_semantic_dedup" -> q47SemanticDedup _,
-    "q48_bm25_topk" -> q48Bm25TopK _,
-    "q49_dup_spans" -> q49DupSpans _,
-    "q50_perplexity" -> q50Perplexity _,
-    "q51_incremental_dedup" -> q51IncrementalDedup _,
-    "q52_pii_redact" -> q52PiiRedact _,
-    "q53_reshard" -> q53Reshard _)
-
   /** Exhaustive all-pairs k-gram Jaccard ground truth — ONE definition
     * shared by q18 (MinHash-LSH), q43 (exact PPJoin), and q114's
-    * Zipf-hot skew gate ([[Round15]]), so every blocking algorithm is
+    * Zipf-hot skew gate, so every blocking algorithm is
     * cross-validated against the identical oracle shape. `corpusCte`
     * must define an `aug(doc_id, text)` CTE body. */
   private[queries] def exactJaccardPairsSql(k: Int, threshold: String,
@@ -939,596 +768,6 @@ object LlmPipeline extends QueryModule {
       |    len(list_distinct(list_concat(a.s, b.s))) >= $threshold
       |ORDER BY id_a, id_b""".stripMargin
   }
-
-  val oracles: Map[String, String] = Map(
-    "q18_minhash_neardup" -> exactJaccardPairsSql(3, "0.8"),
-    "q43_jaccard_neardup" -> exactJaccardPairsSql(3, "0.8"),
-    "q45_distinct_approx" ->
-      s"""WITH a AS (
-        |  SELECT lang, approx_distinct
-        |  FROM ${readBack("q45_distinct_approx")}),
-        |e AS (
-        |  SELECT lang, CAST(count(DISTINCT tok) AS BIGINT) AS exact_distinct
-        |  FROM (SELECT lang, unnest(string_split(text, ' ')) AS tok
-        |        FROM documents)
-        |  GROUP BY lang)
-        |SELECT a.lang, a.approx_distinct, e.exact_distinct,
-        |  round(CAST(abs(a.approx_distinct - e.exact_distinct) AS DOUBLE)
-        |    / e.exact_distinct, 6) AS rel_err,
-        |  round(CAST(abs(a.approx_distinct - e.exact_distinct) AS DOUBLE)
-        |    / e.exact_distinct, 6) <= 0.05 AS within_tol
-        |FROM a JOIN e USING (lang) ORDER BY lang""".stripMargin,
-    "q44_seq_pack" ->
-      s"""WITH t0 AS (SELECT doc_id,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |FROM documents),
-        |ng AS (SELECT greatest(CAST(8 AS BIGINT),
-        |  (sum(n_tokens) + ${SeqPack.DefaultTokensPerGroup - 1}) //
-        |    ${SeqPack.DefaultTokensPerGroup}) AS g FROM t0),
-        |t AS (SELECT doc_id,
-        |  CAST(doc_id % (SELECT g FROM ng) AS BIGINT) AS pack_group,
-        |  n_tokens FROM t0),
-        |c AS (SELECT doc_id, pack_group, n_tokens,
-        |  CAST(sum(n_tokens) OVER (PARTITION BY pack_group ORDER BY doc_id
-        |    ROWS UNBOUNDED PRECEDING) - n_tokens AS BIGINT) AS ts
-        |FROM t)
-        |SELECT doc_id, pack_group, n_tokens,
-        |  CAST(ts // 512 AS BIGINT) AS seq_id,
-        |  CAST(ts % 512 AS BIGINT) AS tok_offset,
-        |  CAST(CASE WHEN n_tokens = 0 THEN 0
-        |       ELSE (ts + n_tokens - 1) // 512 - ts // 512 + 1 END
-        |    AS BIGINT) AS n_seqs
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "q19_ann_topk" ->
-      """WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv
-        |           FROM embeddings WHERE vec_id < 10),
-        |c AS (SELECT vec_id AS nn_id, embedding::DOUBLE[] AS cv FROM embeddings),
-        |scored AS (
-        |  SELECT q_id, nn_id, round(list_cosine_similarity(qv, cv), 6) AS cos
-        |  FROM q CROSS JOIN c WHERE nn_id != q_id),
-        |ranked AS (
-        |  SELECT q_id, nn_id, cos,
-        |    CAST(row_number() OVER (PARTITION BY q_id
-        |      ORDER BY cos DESC, nn_id ASC) AS INTEGER) AS rank
-        |  FROM scored)
-        |SELECT q_id, rank, nn_id, cos FROM ranked
-        |WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-    "q20_lang_id" ->
-      """WITH t AS (SELECT doc_id, ' ' || text || ' ' AS p FROM documents),
-        |s AS (SELECT doc_id,
-        |  (length(p) - length(replace(p, ' the ', ''))) // 5 +
-        |  (length(p) - length(replace(p, ' and ', ''))) // 5 AS s_en,
-        |  (length(p) - length(replace(p, ' der ', ''))) // 5 +
-        |  (length(p) - length(replace(p, ' und ', ''))) // 5 AS s_de,
-        |  (length(p) - length(replace(p, ' le ', ''))) // 4 +
-        |  (length(p) - length(replace(p, ' et ', ''))) // 4 AS s_fr,
-        |  (length(p) - length(replace(p, ' el ', ''))) // 4 +
-        |  (length(p) - length(replace(p, ' y ', ''))) // 3 AS s_es
-        |FROM t)
-        |SELECT doc_id, s_en, s_de, s_fr, s_es,
-        |  CASE WHEN s_en >= greatest(s_de, s_fr, s_es) THEN 'en'
-        |       WHEN s_de >= greatest(s_fr, s_es) THEN 'de'
-        |       WHEN s_fr >= s_es THEN 'fr'
-        |       ELSE 'es' END AS lang_guess
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "q21_text_quality" ->
-      """WITH t AS (SELECT doc_id, text,
-        |  CAST(length(text) AS BIGINT) AS n_chars_m,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |  CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct
-        |FROM documents)
-        |SELECT doc_id, n_chars_m, n_tokens, n_distinct,
-        |  round(CAST(n_distinct AS DOUBLE) / n_tokens, 6) AS diversity,
-        |  round(CAST(n_chars_m - (n_tokens - 1) AS DOUBLE) / n_tokens, 6)
-        |    AS avg_token_len,
-        |  (n_tokens >= 5 AND n_tokens <= 1000 AND
-        |   round(CAST(n_distinct AS DOUBLE) / n_tokens, 6) >= 0.05)
-        |    AS quality_ok
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "q22_token_count" ->
-      """WITH t AS (SELECT lang,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS ws,
-        |  CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]'))
-        |    AS BIGINT) AS re
-        |FROM documents)
-        |SELECT lang, count(*) AS n_docs,
-        |  CAST(sum(ws) AS BIGINT) AS sum_ws_toks,
-        |  CAST(sum(re) AS BIGINT) AS sum_re_toks,
-        |  round(CAST(sum(ws) AS DOUBLE) / count(*), 6) AS avg_ws_toks
-        |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
-    "q23_fingerprint" ->
-      """SELECT source, count(DISTINCT lower(trim(text))) AS n_unique,
-        | count(*) AS n_docs
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    // Read-back oracles (q24/q28/q31): re-derive every SQL-expressible
-    // column of the returned rows from the raw tables; see each query's
-    // scaladoc for the verified-vs-echoed split.
-    "q24_simhash_neardup" ->
-      s"""WITH $augmentedSql,
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      generate_series(1, len(string_split(text, ' ')) - 2),
-        |      i -> string_split(text, ' ')[i] || ' ' ||
-        |           string_split(text, ' ')[i+1] || ' ' ||
-        |           string_split(text, ' ')[i+2])) AS s
-        |  FROM aug),
-        |pairs AS (SELECT id_a, id_b, hamming FROM ${readBack("q24_simhash_neardup")})
-        |SELECT p.id_a, p.id_b, p.hamming,
-        |  CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |    len(list_distinct(list_concat(a.s, b.s))) AS jaccard
-        |FROM pairs p
-        |JOIN sh a ON a.doc_id = p.id_a
-        |JOIN sh b ON b.doc_id = p.id_b
-        |WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |    len(list_distinct(list_concat(a.s, b.s))) >= 0.5
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q67_pq_ann" ->
-      s"""WITH pairs AS (
-        |  SELECT q_id, nn_id FROM ${readBack("q67_pq_ann")}),
-        |emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |rescored AS (
-        |  SELECT p.q_id, p.nn_id,
-        |    round(list_cosine_similarity(q.v, c.v), 6) AS cos
-        |  FROM pairs p
-        |  JOIN emb q ON q.vec_id = p.q_id
-        |  JOIN emb c ON c.vec_id = p.nn_id)
-        |SELECT q_id,
-        |  CAST(row_number() OVER (PARTITION BY q_id
-        |    ORDER BY cos DESC, nn_id ASC) AS INTEGER) AS rank,
-        |  nn_id, cos
-        |FROM rescored ORDER BY q_id, rank""".stripMargin,
-    "q28_ivf_ann" ->
-      s"""WITH pairs AS (
-        |  SELECT q_id, nn_id FROM ${readBack("q28_ivf_ann")}),
-        |emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |rescored AS (
-        |  SELECT p.q_id, p.nn_id,
-        |    round(list_cosine_similarity(q.v, c.v), 6) AS cos
-        |  FROM pairs p
-        |  JOIN emb q ON q.vec_id = p.q_id
-        |  JOIN emb c ON c.vec_id = p.nn_id)
-        |SELECT q_id,
-        |  CAST(row_number() OVER (PARTITION BY q_id
-        |    ORDER BY cos DESC, nn_id ASC) AS INTEGER) AS rank,
-        |  nn_id, cos
-        |FROM rescored ORDER BY q_id, rank""".stripMargin,
-    "q31_winnow_neardup" ->
-      s"""WITH $augmentedSql,
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      generate_series(1, len(string_split(text, ' ')) - 2),
-        |      i -> string_split(text, ' ')[i] || ' ' ||
-        |           string_split(text, ' ')[i+1] || ' ' ||
-        |           string_split(text, ' ')[i+2])) AS s
-        |  FROM aug),
-        |pairs AS (SELECT id_a, id_b, shared_fps FROM ${readBack("q31_winnow_neardup")})
-        |SELECT p.id_a, p.id_b, p.shared_fps,
-        |  CASE WHEN len(list_distinct(list_concat(a.s, b.s))) = 0 THEN 0.0
-        |       ELSE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |            len(list_distinct(list_concat(a.s, b.s))) END AS jaccard
-        |FROM pairs p
-        |JOIN sh a ON a.doc_id = p.id_a
-        |JOIN sh b ON b.doc_id = p.id_b
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q25_embed_neardup" ->
-      """WITH corpus AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 1000000, list_transform(embedding::DOUBLE[], x -> x * 2),
-        |         label
-        |  FROM embeddings)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.label,
-        |  round(list_cosine_similarity(a.v, b.v), 6) AS cos
-        |FROM corpus a JOIN corpus b
-        |  ON a.label = b.label AND a.vec_id < b.vec_id
-        |WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.999
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q32_cluster_dedup" ->
-      s"""WITH RECURSIVE $augmentedSql,
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      generate_series(1, len(string_split(text, ' ')) - 2),
-        |      i -> string_split(text, ' ')[i] || ' ' ||
-        |           string_split(text, ' ')[i+1] || ' ' ||
-        |           string_split(text, ' ')[i+2])) AS s
-        |  FROM aug),
-        |sh2 AS (SELECT * FROM sh WHERE len(s) > 0),
-        |p AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM sh2 a JOIN sh2 b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |      len(list_distinct(list_concat(a.s, b.s))) >= 0.8),
-        |e AS (SELECT id_a AS s, id_b AS d FROM p
-        |      UNION ALL SELECT id_b, id_a FROM p),
-        |reach(s, d) AS (
-        |  SELECT s, d FROM e
-        |  UNION
-        |  SELECT r.s, e2.d FROM reach r JOIN e e2 ON r.d = e2.s)
-        |SELECT s AS doc_id, CAST(least(s, min(d)) AS BIGINT) AS rep_id
-        |FROM reach GROUP BY s ORDER BY doc_id""".stripMargin,
-    "q33_embed_neardup_lsh" ->
-      """WITH corpus AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 1000000, list_transform(embedding::DOUBLE[], x -> x * 2)
-        |  FROM embeddings)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_cosine_similarity(a.v, b.v), 6) AS cos
-        |FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-        |WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.999
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q35_repetition" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |g AS (
-        |  SELECT doc_id, unnest(list_transform(
-        |    generate_series(1, len(ws) - 1),
-        |    i -> ws[i] || ' ' || ws[i+1])) AS gram
-        |  FROM w),
-        |c AS (SELECT doc_id, gram, count(*) AS n FROM g GROUP BY doc_id, gram)
-        |SELECT doc_id,
-        |  CAST(sum(n) AS BIGINT) AS n_bigrams,
-        |  CAST(max(n) AS BIGINT) AS top_bigram_n,
-        |  round(CAST(max(n) AS DOUBLE) / sum(n), 6) AS top_frac,
-        |  round(CAST(max(n) AS DOUBLE) / sum(n), 6) >= 0.18 AS repetitive
-        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q36_pii_extract" ->
-      """SELECT event_id,
-        |  event_type || CAST(user_id AS VARCHAR) || '@example.com' AS email_1,
-        |  event_type || '_admin@corp.io' AS email_2,
-        |  CAST(user_id % 900 + 100 AS VARCHAR) || '-' ||
-        |    CAST((user_id * 7) % 9000 + 1000 AS VARCHAR) AS phone,
-        |  CAST(3 AS BIGINT) AS n_pii
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q26_media_meta" ->
-      """SELECT doc_id AS media_id, 'image' AS kind,
-        | CAST(strlen(text) AS BIGINT) AS size_bytes,
-        | CAST(strlen(text) % 640 AS INTEGER) AS width,
-        | CAST(strlen(text) % 480 AS INTEGER) AS height,
-        | CAST(strlen(text) // 100 + 1 AS INTEGER) AS n_frames,
-        | CAST(strlen(text) % 100 AS BIGINT) AS first_frame_offset,
-        | 'opaque' AS status
-        |FROM documents
-        |UNION ALL
-        |SELECT doc_id + 1000000 AS media_id,
-        | CASE doc_id % 6 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
-        |   WHEN 2 THEN 'gif' WHEN 3 THEN 'bmp' WHEN 4 THEN 'webp'
-        |   ELSE 'tiff' END AS kind,
-        | CAST(CASE doc_id % 6 WHEN 0 THEN 45 WHEN 1 THEN 23
-        |   WHEN 2 THEN 13 WHEN 3 THEN 54 WHEN 4 THEN 30
-        |   ELSE 38 END AS BIGINT) AS size_bytes,
-        | CAST(doc_id % 640 + 1 AS INTEGER) AS width,
-        | CAST(doc_id % 480 + 1 AS INTEGER) AS height,
-        | CAST(1 AS INTEGER) AS n_frames,
-        | CAST(0 AS BIGINT) AS first_frame_offset,
-        | 'ok' AS status
-        |FROM documents
-        |UNION ALL
-        |SELECT doc_id + 2000000 AS media_id,
-        | CASE doc_id % 6 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
-        |   WHEN 2 THEN 'gif' WHEN 3 THEN 'bmp' WHEN 4 THEN 'webp'
-        |   ELSE 'tiff' END AS kind,
-        | CAST(CASE doc_id % 6 WHEN 0 THEN 12 WHEN 1 THEN 6
-        |   WHEN 2 THEN 8 WHEN 3 THEN 26 WHEN 4 THEN 12
-        |   ELSE 8 END AS BIGINT) AS size_bytes,
-        | CAST(0 AS INTEGER) AS width, CAST(0 AS INTEGER) AS height,
-        | CAST(0 AS INTEGER) AS n_frames,
-        | CAST(0 AS BIGINT) AS first_frame_offset,
-        | 'quarantined' AS status
-        |FROM documents ORDER BY media_id""".stripMargin,
-    "q37_contamination" ->
-      """WITH tw AS (SELECT doc_id, string_split(text, ' ') AS w
-        |            FROM documents WHERE doc_id % 20 <> 0),
-        |bw AS (SELECT string_split(text, ' ') AS w
-        |       FROM documents WHERE doc_id % 20 = 0),
-        |bg AS (SELECT DISTINCT array_to_string(w[i:i+3], ' ') AS gram
-        |       FROM bw, UNNEST(range(1, greatest(len(w) - 2, 1))) AS t(i)),
-        |tg AS (SELECT DISTINCT doc_id, array_to_string(w[i:i+3], ' ') AS gram
-        |       FROM tw, UNNEST(range(1, greatest(len(w) - 2, 1))) AS t(i)),
-        |cnt AS (SELECT doc_id, count(*) AS n_hit
-        |        FROM tg JOIN bg USING(gram) GROUP BY doc_id),
-        |tot AS (SELECT doc_id, count(*) AS n_grams FROM tg GROUP BY doc_id)
-        |SELECT d.doc_id AS doc_id,
-        |  CAST(coalesce(tot.n_grams, 0) AS BIGINT) AS n_grams,
-        |  CAST(coalesce(cnt.n_hit, 0) AS BIGINT) AS n_contaminated,
-        |  CASE WHEN coalesce(tot.n_grams, 0) = 0 THEN CAST(0.0 AS DOUBLE)
-        |       ELSE round(CAST(coalesce(cnt.n_hit, 0) AS DOUBLE)
-        |                  / tot.n_grams, 6) END AS contam_frac,
-        |  coalesce(cnt.n_hit, 0) >= 1 AS contaminated
-        |FROM (SELECT doc_id FROM documents WHERE doc_id % 20 <> 0) d
-        |LEFT JOIN tot ON tot.doc_id = d.doc_id
-        |LEFT JOIN cnt ON cnt.doc_id = d.doc_id
-        |ORDER BY 1""".stripMargin,
-    "q38_dedup_corpus" ->
-      s"""WITH RECURSIVE $augmentedSql,
-        |aug2 AS (SELECT doc_id, text FROM aug
-        |         UNION ALL
-        |         SELECT doc_id + 2000000, text FROM documents
-        |         WHERE n_chars >= 100),
-        |g AS (SELECT doc_id, text,
-        |        min(doc_id) OVER (PARTITION BY lower(trim(text))) AS erep
-        |      FROM aug2),
-        |reps AS (SELECT doc_id, text FROM g WHERE doc_id = erep),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      generate_series(1, len(string_split(text, ' ')) - 2),
-        |      i -> string_split(text, ' ')[i] || ' ' ||
-        |           string_split(text, ' ')[i+1] || ' ' ||
-        |           string_split(text, ' ')[i+2])) AS s
-        |  FROM reps),
-        |sh2 AS (SELECT * FROM sh WHERE len(s) > 0),
-        |p AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM sh2 a JOIN sh2 b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |      len(list_distinct(list_concat(a.s, b.s))) >= 0.8),
-        |e AS (SELECT id_a AS s, id_b AS d FROM p
-        |      UNION ALL SELECT id_b, id_a FROM p),
-        |reach(s, d) AS (
-        |  SELECT s, d FROM e
-        |  UNION
-        |  SELECT r.s, e2.d FROM reach r JOIN e e2 ON r.d = e2.s),
-        |comp AS (SELECT s AS doc_id, least(s, min(d)) AS rep
-        |         FROM reach GROUP BY s),
-        |near_drop AS (SELECT doc_id FROM comp WHERE doc_id <> rep)
-        |SELECT g.doc_id AS doc_id,
-        |  CASE WHEN g.doc_id <> g.erep THEN 'exact_dup'
-        |       WHEN nd.doc_id IS NOT NULL THEN 'near_dup'
-        |       ELSE 'kept' END AS stage,
-        |  (g.doc_id = g.erep AND nd.doc_id IS NULL) AS kept
-        |FROM g LEFT JOIN near_drop nd ON nd.doc_id = g.doc_id
-        |ORDER BY 1""".stripMargin,
-    "q39_corpus_mix" ->
-      """WITH wt AS (
-        |  SELECT 'src' || CAST(i AS VARCHAR) AS source,
-        |    CAST(CASE i % 4 WHEN 0 THEN 0.0 WHEN 1 THEN 0.5
-        |         WHEN 2 THEN 1.0 ELSE 2.5 END AS DOUBLE) AS w
-        |  FROM range(20) t(i)),
-        |n AS (
-        |  SELECT d.doc_id, d.source,
-        |    CAST(floor(w) AS BIGINT) +
-        |      CASE WHEN d.doc_id % 1000 < (w - floor(w)) * 1000
-        |           THEN 1 ELSE 0 END AS nc
-        |  FROM documents d JOIN wt USING(source))
-        |SELECT doc_id, source, CAST(c AS BIGINT) AS copy
-        |FROM n, UNNEST(range(1, nc + 1)) t(c)
-        |ORDER BY doc_id, copy""".stripMargin,
-    "q40_quality_filter" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS w
-        |           FROM documents),
-        |m AS (SELECT doc_id,
-        |  CAST(len(w) AS BIGINT) AS n_words,
-        |  round(CAST(length(text) - (len(w) - 1) AS DOUBLE) / len(w), 6)
-        |    AS mean_word_len,
-        |  round(CAST(len(list_distinct(w)) AS DOUBLE) / len(w), 6)
-        |    AS diversity,
-        |  list_has_any(w, ['the', 'a', 'and']) AS stop_ok
-        |FROM t)
-        |SELECT doc_id, n_words, mean_word_len, diversity, stop_ok,
-        |  n_words BETWEEN 50 AND 10000 AS n_words_ok,
-        |  mean_word_len BETWEEN 3.0 AND 10.0 AS word_len_ok,
-        |  diversity >= 0.1 AS diversity_ok,
-        |  (n_words BETWEEN 50 AND 10000 AND
-        |   mean_word_len BETWEEN 3.0 AND 10.0 AND
-        |   diversity >= 0.1 AND stop_ok) AS pass
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "q41_corpus_build" ->
-      s"""$corpusBuildSqlPrefix
-        |SELECT doc_id, source, CAST(c AS BIGINT) AS copy
-        |FROM n, UNNEST(range(1, nc + 1)) t(c)
-        |ORDER BY doc_id, copy""".stripMargin,
-    "q46_corpus_pack" ->
-      s"""$corpusBuildSqlPrefix,
-        |mixed AS (
-        |  SELECT doc_id, source, CAST(c AS BIGINT) AS copy
-        |  FROM n, UNNEST(range(1, nc + 1)) t(c)),
-        |tok AS (SELECT doc_id,
-        |          CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |        FROM corpus),
-        |packrows0 AS (
-        |  SELECT m.doc_id * 8 + m.copy AS row_id, m.doc_id, t.n_tokens
-        |  FROM mixed m JOIN tok t USING (doc_id)),
-        |ng AS (SELECT greatest(CAST(8 AS BIGINT),
-        |  (sum(n_tokens) + ${SeqPack.DefaultTokensPerGroup - 1}) //
-        |    ${SeqPack.DefaultTokensPerGroup}) AS g FROM packrows0),
-        |packrows AS (
-        |  SELECT row_id,
-        |    CAST(doc_id % (SELECT g FROM ng) AS BIGINT) AS pack_group, n_tokens
-        |  FROM packrows0),
-        |cum AS (
-        |  SELECT row_id, pack_group, n_tokens,
-        |    CAST(sum(n_tokens) OVER (PARTITION BY pack_group ORDER BY row_id
-        |      ROWS UNBOUNDED PRECEDING) - n_tokens AS BIGINT) AS ts
-        |  FROM packrows)
-        |SELECT row_id, pack_group, n_tokens,
-        |  CAST(ts // 512 AS BIGINT) AS seq_id,
-        |  CAST(ts % 512 AS BIGINT) AS tok_offset,
-        |  CAST(CASE WHEN n_tokens = 0 THEN 0
-        |       ELSE (ts + n_tokens - 1) // 512 - ts // 512 + 1 END
-        |    AS BIGINT) AS n_seqs
-        |FROM cum ORDER BY row_id""".stripMargin,
-    "q47_semantic_dedup" ->
-      s"""WITH RECURSIVE out AS (
-        |  SELECT vec_id, cell FROM ${readBack("q47_semantic_dedup")}),
-        |corpus AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 1000000, list_transform(embedding::DOUBLE[], x -> x * 2)
-        |  FROM embeddings),
-        |m AS (SELECT o.vec_id, o.cell, c.v FROM out o JOIN corpus c USING (vec_id)),
-        |p AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM m a JOIN m b ON a.cell = b.cell AND a.vec_id < b.vec_id
-        |  WHERE a.cell <> -1
-        |    AND round(list_cosine_similarity(a.v, b.v), 6) >= 0.999),
-        |e AS (SELECT id_a AS s, id_b AS d FROM p
-        |      UNION ALL SELECT id_b, id_a FROM p),
-        |reach(s, d) AS (
-        |  SELECT s, d FROM e
-        |  UNION
-        |  SELECT r.s, e2.d FROM reach r JOIN e e2 ON r.d = e2.s),
-        |rep AS (SELECT s AS vec_id, least(s, min(d)) AS rep_id
-        |        FROM reach GROUP BY s)
-        |SELECT m.vec_id, m.cell,
-        |  CAST(coalesce(rep.rep_id, m.vec_id) AS BIGINT) AS rep_id,
-        |  coalesce(rep.rep_id, m.vec_id) = m.vec_id AS kept
-        |FROM m LEFT JOIN rep USING (vec_id) ORDER BY m.vec_id""".stripMargin,
-    "q48_bm25_topk" -> {
-      val values = bm25Queries
-        .map { case (i, t) => s"($i, '$t')" }.mkString(", ")
-      s"""WITH q(q_id, q_text) AS (VALUES $values),
-        |qt AS (SELECT q_id, unnest(list_distinct(string_split(q_text, ' '))) AS term
-        |       FROM q),
-        |d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |dl AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS dl FROM d),
-        |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-        |tok AS (SELECT doc_id, unnest(ws) AS term FROM d),
-        |tf AS (SELECT qt.q_id, qt.term, tok.doc_id, count(*) AS tf
-        |       FROM tok JOIN qt USING (term) GROUP BY 1, 2, 3),
-        |df AS (SELECT q_id, term, count(*) AS df FROM tf GROUP BY 1, 2),
-        |sc AS (SELECT tf.q_id, tf.doc_id,
-        |  CAST(ln((stats.n - df.df + 0.5) / (df.df + 0.5) + 1) *
-        |    (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / stats.avgdl))
-        |    AS DECIMAL(28,12)) AS s
-        |  FROM tf JOIN df USING (q_id, term) JOIN dl USING (doc_id)
-        |  CROSS JOIN stats),
-        |agg AS (SELECT q_id, doc_id, round(CAST(sum(s) AS DOUBLE), 6) AS score
-        |        FROM sc GROUP BY 1, 2),
-        |r AS (SELECT q_id, doc_id, score,
-        |  CAST(row_number() OVER (PARTITION BY q_id
-        |    ORDER BY score DESC, doc_id) AS INTEGER) AS rank
-        |  FROM agg)
-        |SELECT q_id, rank, doc_id, score FROM r
-        |WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin
-    },
-    "q49_dup_spans" ->
-      s"""WITH $augmentedSql,
-        |toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM aug),
-        |g2 AS (SELECT doc_id, i AS pos, array_to_string(w[i:i+9], ' ') AS gram
-        |       FROM toks, UNNEST(range(1, greatest(len(w) - 8, 1))) AS t(i)),
-        |dup AS (SELECT gram FROM g2 GROUP BY gram HAVING count(*) >= 2),
-        |cov AS (SELECT doc_id, pos, pos + 9 AS e FROM g2 JOIN dup USING (gram)),
-        |isl AS (SELECT doc_id, pos, e,
-        |          max(e) OVER (PARTITION BY doc_id ORDER BY pos
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-        |        FROM cov),
-        |isl2 AS (SELECT doc_id, pos, e,
-        |           sum(CASE WHEN pmax IS NULL OR pos > pmax + 1
-        |               THEN 1 ELSE 0 END)
-        |             OVER (PARTITION BY doc_id ORDER BY pos
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |             AS island
-        |         FROM isl),
-        |spans AS (SELECT doc_id, island, min(pos) AS s, max(e) AS e2
-        |          FROM isl2 GROUP BY doc_id, island),
-        |prof AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dup_spans,
-        |           CAST(sum(e2 - s + 1) AS BIGINT) AS dup_tokens
-        |         FROM spans GROUP BY doc_id)
-        |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_tokens,
-        |  CAST(coalesce(p.n_dup_spans, 0) AS BIGINT) AS n_dup_spans,
-        |  CAST(coalesce(p.dup_tokens, 0) AS BIGINT) AS dup_tokens,
-        |  round(CAST(coalesce(p.dup_tokens, 0) AS DOUBLE) / len(t.w), 6)
-        |    AS dup_ratio
-        |FROM toks t LEFT JOIN prof p USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "q50_perplexity" ->
-      s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS w
-        |           FROM documents),
-        |bo AS (SELECT doc_id, w[i] AS p, w[i] || ' ' || w[i+1] AS b
-        |       FROM d, UNNEST(range(1, greatest(len(w), 1))) AS t(i)),
-        |tf AS (SELECT doc_id, b, p, CAST(count(*) AS BIGINT) AS tf
-        |       FROM bo GROUP BY 1, 2, 3),
-        |c2 AS (SELECT b, CAST(sum(tf) AS BIGINT) AS c2 FROM tf GROUP BY b),
-        |c1 AS (SELECT p, CAST(sum(tf) AS BIGINT) AS c1 FROM tf GROUP BY p),
-        |v AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS v
-        |      FROM (SELECT unnest(string_split(text, ' ')) AS tok
-        |            FROM documents)),
-        |term AS (SELECT tf.doc_id,
-        |    CAST(ln((CAST(c2.c2 AS DOUBLE) + 1.0) /
-        |        CAST(c1.c1 + v.v AS DOUBLE)) * tf.tf
-        |      AS DECIMAL(28,12)) AS s,
-        |    tf.tf AS tf
-        |  FROM tf JOIN c2 USING (b) JOIN c1 USING (p) CROSS JOIN v),
-        |agg AS (SELECT doc_id, sum(s) AS ss,
-        |          CAST(sum(tf) AS BIGINT) AS n_bigrams
-        |        FROM term GROUP BY doc_id)
-        |SELECT d.doc_id, CAST(len(d.w) AS BIGINT) AS n_tokens,
-        |  CAST(coalesce(a.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-        |  round(-CAST(a.ss AS DOUBLE) / a.n_bigrams, 6) AS nll,
-        |  CASE WHEN a.doc_id IS NULL THEN 'unscored'
-        |       WHEN round(-CAST(a.ss AS DOUBLE) / a.n_bigrams, 6)
-        |         <= CAST($perplexityHeadMax AS DOUBLE) THEN 'head'
-        |       WHEN round(-CAST(a.ss AS DOUBLE) / a.n_bigrams, 6)
-        |         <= CAST($perplexityMiddleMax AS DOUBLE) THEN 'middle'
-        |       ELSE 'tail' END AS bucket
-        |FROM d LEFT JOIN agg a USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "q51_incremental_dedup" ->
-      """WITH hist AS (SELECT doc_id, text FROM documents),
-        |newb AS (
-        |  SELECT doc_id + 1000000 AS doc_id,
-        |    substr(text, strpos(text, ' ') + 1) AS text
-        |  FROM documents WHERE n_chars >= 100
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, text FROM documents WHERE n_chars >= 100
-        |  UNION ALL
-        |  SELECT doc_id + 3000000,
-        |    array_to_string(list_reverse(string_split(text, ' ')), ' ')
-        |  FROM documents WHERE n_chars >= 100),
-        |ex AS (SELECT n.doc_id, CAST(count(*) AS BIGINT) AS n_exact
-        |       FROM newb n JOIN hist h
-        |         ON lower(trim(n.text)) = lower(trim(h.text))
-        |       GROUP BY 1),
-        |ns AS (SELECT doc_id, list_distinct(list_transform(
-        |         generate_series(1, len(string_split(text, ' ')) - 2),
-        |         i -> string_split(text, ' ')[i] || ' ' ||
-        |              string_split(text, ' ')[i+1] || ' ' ||
-        |              string_split(text, ' ')[i+2])) AS s
-        |       FROM newb
-        |       WHERE doc_id NOT IN (SELECT doc_id FROM ex)),
-        |hs AS (SELECT doc_id, list_distinct(list_transform(
-        |         generate_series(1, len(string_split(text, ' ')) - 2),
-        |         i -> string_split(text, ' ')[i] || ' ' ||
-        |              string_split(text, ' ')[i+1] || ' ' ||
-        |              string_split(text, ' ')[i+2])) AS s
-        |       FROM hist),
-        |nr AS (SELECT n.doc_id, CAST(count(*) AS BIGINT) AS n_near
-        |       FROM ns n JOIN hs h
-        |         ON len(n.s) > 0 AND len(h.s) > 0
-        |        AND CAST(len(list_intersect(n.s, h.s)) AS DOUBLE) /
-        |            len(list_distinct(list_concat(n.s, h.s))) >= 0.8
-        |       GROUP BY 1)
-        |SELECT n.doc_id,
-        |  CASE WHEN ex.doc_id IS NOT NULL THEN 'exact'
-        |       WHEN nr.doc_id IS NOT NULL THEN 'near'
-        |       ELSE 'new' END AS verdict,
-        |  CAST(coalesce(ex.n_exact, nr.n_near, 0) AS BIGINT) AS n_dups
-        |FROM newb n
-        |LEFT JOIN ex ON ex.doc_id = n.doc_id
-        |LEFT JOIN nr ON nr.doc_id = n.doc_id
-        |ORDER BY n.doc_id""".stripMargin,
-    "q52_pii_redact" ->
-      """SELECT event_id,
-        |  'user ' || CAST(user_id AS VARCHAR) ||
-        |    ' contact <EMAIL> or <EMAIL> tel <PHONE> src <IP>' AS redacted,
-        |  CAST(4 AS BIGINT) AS n_redacted
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q53_reshard" ->
-      s"""WITH o AS (SELECT doc_id, h, shard, pos
-        |           FROM ${readBack("q53_reshard")}),
-        |j AS (SELECT d.doc_id, o.h FROM documents d
-        |      LEFT JOIN o ON o.doc_id = d.doc_id),
-        |r AS (SELECT doc_id, h,
-        |        CAST(((h % 32) + 32) % 32 AS INTEGER) AS shard,
-        |        CAST(row_number() OVER (
-        |          PARTITION BY ((h % 32) + 32) % 32
-        |          ORDER BY h, doc_id) AS BIGINT) AS pos
-        |      FROM j)
-        |SELECT doc_id, h, shard, pos FROM r
-        |ORDER BY shard, pos""".stripMargin)
 
   /** Shared WITH-chain of the corpus-build DAG oracle (quality gate →
     * exact dedup → transitive near-dup closure → decontamination → mix
@@ -1606,4 +845,1267 @@ object LlmPipeline extends QueryModule {
         |          CASE WHEN b.doc_id % 1000 < (w - floor(w)) * 1000
         |               THEN 1 ELSE 0 END AS nc
         |      FROM base b JOIN wt USING(source))""".stripMargin
+
+  /** q57's unicode plant, keyed by doc_id % 4: decomposed accents (NFC
+    * composes), compatibility-composed U+212B (NFC maps to U+00C5),
+    * C0 controls (stripped), and whitespace runs (collapsed). The
+    * Scala literals and the oracle's chr() concatenations must stay
+    * character-for-character identical. */
+  private def plantedText = concat(col("text"),
+    when(pmod(col("doc_id"), lit(4)) === 0,
+        lit("  Cafe\u0301 \u0007du\u000B monde "))
+      .when(pmod(col("doc_id"), lit(4)) === 1,
+        lit("\t\u212B Angstro\u0308m"))
+      .when(pmod(col("doc_id"), lit(4)) === 2, lit(" already clean "))
+      .otherwise(lit("A\u030A\u0001end")))
+
+  // NOTE: no line may START with "||" — this fragment is re-embedded in
+  // a stripMargin template, which would eat the first pipe
+  private val plantedSql =
+    """text || CASE
+      |    WHEN doc_id % 4 = 0 THEN '  Cafe' || chr(769) || ' ' || chr(7) ||
+      |      'du' || chr(11) || ' monde '
+      |    WHEN doc_id % 4 = 1 THEN chr(9) || chr(8491) || ' Angstro' ||
+      |      chr(776) || 'm'
+      |    WHEN doc_id % 4 = 2 THEN ' already clean '
+      |    ELSE 'A' || chr(778) || chr(1) || 'end' END""".stripMargin
+
+  /** q57: corpus text canonicalization
+    * ([[graft.functions.NormalizeText]]): control strip → NFC →
+    * whitespace collapse → trim, one native codegen pass. Pure map —
+    * no shuffle; the plant makes every branch observable on an
+    * otherwise-ASCII corpus. */
+  def q57TextNormalize(s: SparkSession, dir: String): DataFrame = {
+    Tables.parallel(s, dir, "documents")
+      .select(col("doc_id"),
+        ColumnBridge.col(graft.functions.NormalizeText(
+          ColumnBridge.expr(plantedText))).as("norm_text"))
+      .orderBy("doc_id")
+  }
+
+  /** q58: sketched heavy hitters over word bigrams — ClickHouse `topK`
+    * (SpaceSaving) as a [[graft.functions.SpaceSavingTopK]] typed
+    * imperative aggregate: per-partition summaries of `capacity`
+    * counters, one tiny merge at the driver-side reduce — the shape
+    * that holds when the corpus has 10^12 grams but the answer is 20
+    * rows. capacity=128 < the ~916-bigram vocabulary, so evictions and
+    * truncating merges are genuinely exercised at every SF. The sketch
+    * content is merge-order dependent, so the oracle reads the result
+    * back and re-checks the SpaceSaving invariant (est − err ≤ exact ≤
+    * est, term must exist) against exact DuckDB counts — any violated
+    * row is filtered out and fails the hash compare. */
+  def q58TopkSketch(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.parallel(s, dir, "documents")
+    val grams = docs
+      .select(split(col("text"), " ").as("__w"))
+      .select(explode(when(size(col("__w")) >= 2,
+        expr("transform(sequence(0, size(__w) - 2), " +
+          "i -> concat_ws(' ', __w[i], __w[i + 1]))"))).as("gram"))
+    val sk = grams.agg(ColumnBridge.col(
+      graft.functions.SpaceSavingTopK(
+        ColumnBridge.expr(col("gram")), capacity = 128)
+        .toAggregateExpression()).as("__sk"))
+    sk.select(posexplode(slice(col("__sk"), 1, 20)).as(Seq("__i", "__c")))
+      .select((col("__i") + 1).cast("long").as("rank"),
+        col("__c.term").as("term"), col("__c.est").as("est"),
+        col("__c.err").as("err"))
+      .orderBy("rank")
+  }
+
+  /** q59's corpus: documents ∪ a 35% head snippet of every long doc
+    * (+4M ids) — planted doc-in-doc inclusions that Jaccard dedup
+    * (q18/q43, scoring ~0.35 here) can never flag. Word arithmetic is
+    * integer-exact and mirrored by the oracle. */
+  private[graft] def snippetCorpus(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.parallel(s, dir, "documents")
+    val w = split(col("text"), " ")
+    val nTake = greatest(lit(5L), floor(size(w) * 35 / 100)).cast("int")
+    docs.select(col("doc_id"), col("text"))
+      .unionByName(docs.filter(col("n_chars") >= 100)
+        .select((col("doc_id") + 4000000L).as("doc_id"),
+          concat_ws(" ", slice(w, lit(1), nTake)).as("text")))
+  }
+
+  /** q59: asymmetric containment self-join
+    * ([[graft.operators.ContainmentJoin]]) — directed doc-in-doc pairs
+    * at trigram containment ≥ 0.9. Exhaustive all-pairs DuckDB ground
+    * truth (the q43 pattern): the lossless probe-prefix blocking must
+    * reproduce it exactly. */
+  def q59ContainmentDedup(s: SparkSession, dir: String): DataFrame =
+    graft.operators.ContainmentJoin.containedPairs(
+        snippetCorpus(s, dir), "doc_id", "text", k = 3, minContainment = 0.9)
+      .orderBy("id_a", "id_b")
+
+  /** q61: per-source document quota ([[graft.operators.SourceQuota]]) —
+    * RefinedWeb-style "at most 15 docs per domain", selected by the
+    * deterministic Knuth-hash priority. The operator's map-side bounded
+    * heap must reproduce the oracle's window formulation exactly. */
+  def q61SourceQuota(s: SparkSession, dir: String): DataFrame =
+    graft.operators.SourceQuota.cap(
+        Tables.parallel(s, dir, "documents"), "source", "doc_id", n = 15)
+      .select(col("key").as("source"), col("rank"),
+        col("id").as("doc_id"), col("pri"))
+      .orderBy("source", "rank")
+
+  /** q64: cross-source near-dup leakage matrix — how many exact-Jaccard
+    * near-dup pairs link each source pair. The diagnostic a corpus
+    * builder runs before mixing: a hot cell means two "independent"
+    * sources share content (mirrors, scrapes of scrapes) and their mix
+    * weights double-count it. Pair base is the EXACT PPJoin
+    * ([[graft.operators.JaccardJoin]]), aggregated by normalized source
+    * pair, so the matrix inherits q43's exactness — the oracle
+    * recomputes it from the exhaustive all-pairs scan. The plant gives
+    * each long doc a near-dup copy attributed to the NEXT source, so
+    * off-diagonal cells are populated at every SF. */
+  def q64SourceOverlap(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.parallel(s, dir, "documents")
+    val long = docs.filter(col("n_chars") >= 100)
+    val aug = docs.select(col("doc_id"), col("text"), col("source"))
+      .unionByName(long.select(
+        (col("doc_id") + 1000000L).as("doc_id"),
+        expr("substring(text, instr(text, ' ') + 1)").as("text"),
+        concat(lit("src"), pmod(col("doc_id") + 1, lit(20))).as("source")))
+    val pairs = graft.operators.JaccardJoin.nearDupPairs(
+      aug.select("doc_id", "text"), "doc_id", "text", k = 3, minJaccard = 0.8)
+    val src = aug.select(col("doc_id"), col("source"))
+    pairs
+      .join(src.as("sa"), pairs("id_a") === col("sa.doc_id"))
+      .join(src.as("sb"), pairs("id_b") === col("sb.doc_id"))
+      .select(
+        least(col("sa.source"), col("sb.source")).as("source_a"),
+        greatest(col("sa.source"), col("sb.source")).as("source_b"))
+      .groupBy("source_a", "source_b")
+      .agg(count(lit(1)).as("pair_cnt"))
+      .orderBy("source_a", "source_b")
+  }
+
+  /** q65: sliding-window token chunking ([[graft.operators.Chunker]]) —
+    * long documents become overlapping 50-token training windows at
+    * stride 40 (10-token overlap), short tails < 10 tokens dropped
+    * unless they are the document's only chunk. Pure narrow projection:
+    * no shuffle until the presentation `orderBy`. */
+  def q65DocChunk(s: SparkSession, dir: String): DataFrame =
+    graft.operators.Chunker.slidingChunks(
+        Tables.parallel(s, dir, "documents"), "doc_id", "text",
+        window = 50, stride = 40, minTail = 10)
+      .orderBy("doc_id", "chunk_id")
+
+  /** q66: per-source adaptive quality cut — keep each source's top 70%
+    * of documents by token count (`10·rank ≤ 7·|source|`, all-integer so
+    * the threshold is exact at every SF). The rank-fraction form is the
+    * scale-stable way to express "per-domain quality quantile": no
+    * floating-point percentile to knife-edge, one window over the
+    * source partition, and skew is bounded by the largest single
+    * source, not the corpus. */
+  def q66QualityTopfrac(s: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val docs = Tables.parallel(s, dir, "documents")
+    val nTok = size(split(col("text"), " ")).cast("long")
+    val bySrc = Window.partitionBy(col("source"))
+    val w = bySrc.orderBy(col("n_tokens").desc, col("doc_id").asc)
+    docs
+      .select(col("source"), col("doc_id"), nTok.as("n_tokens"))
+      .withColumn("rank", row_number().over(w).cast("int"))
+      .withColumn("__cnt", count(lit(1)).over(bySrc))
+      .filter(lit(10) * col("rank") <= lit(7) * col("__cnt"))
+      .select("source", "rank", "doc_id", "n_tokens")
+      .orderBy("source", "rank")
+  }
+
+  /** q75's threshold: planted near-dup doc pairs sit at head edit
+    * distance <= 4 while unrelated word-salad pairs start at ~37
+    * (measured at sf0.01) — 8 keeps a wide margin on both sides. */
+  val editDistMax = 8
+
+  val editHeadChars = 80
+
+  /** q75: exact edit-distance self-join over fixed-length document
+    * heads ([[graft.operators.EditDistanceJoin]], Pass-Join pigeonhole
+    * blocking) — the character-level near-dup detector that catches
+    * small in-place edits Jaccard shingles over-penalize. Candidates
+    * come from a complete segment/window hash join; only candidate
+    * pairs run the banded Levenshtein. The oracle is the brute-force
+    * all-pairs scan (fine at sf0.01; the operator exists precisely so
+    * the corpus never pays that quadratic cost). */
+  def q75EditDistJoin(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.parallel(s, dir, "documents")
+      .filter(col("n_chars") >= editHeadChars)
+      .select(col("doc_id"),
+        substring(col("text"), 1, editHeadChars).as("head"))
+    graft.operators.EditDistanceJoin
+      .selfJoin(docs, "doc_id", "head", editDistMax)
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("dist"))
+      .orderBy("doc_a", "doc_b")
+  }
+
+  /** q96's temperature: α=0.5 — strong rebalancing toward uniform
+    * while keeping the natural ordering of source sizes. */
+  val mixAlpha = 0.5
+
+  /** q96: temperature-balanced corpus mixing
+    * ([[graft.operators.CorpusMix.temperatureWeights]] → `mix`) — the
+    * multilingual/source-balancing flow: α-sampling weights derived
+    * from the corpus's own source counts, fanned out by q39's
+    * deterministic bucket rule. Output: per source, the original and
+    * realized doc counts plus the derived weight. */
+  def q96TemperatureMix(s: SparkSession, dir: String): DataFrame = {
+    import graft.operators.CorpusMix
+    val docs = Tables.parallel(s, dir, "documents")
+    val weights = CorpusMix.temperatureWeights(docs, "source", mixAlpha)
+    val mixed = CorpusMix.mix(docs, weights, "source",
+      bucket = col("doc_id") % 1000, buckets = 1000)
+    val orig = docs.groupBy(col("source")).agg(count(lit(1)).as("n_orig"))
+    mixed.groupBy(col("source")).agg(count(lit(1)).as("n_mixed"))
+      .join(orig, "source")
+      .join(weights.select(col("source"),
+        round(col("weight"), 6).as("weight")), "source")
+      .select("source", "n_orig", "n_mixed", "weight")
+      .orderBy("source")
+  }
+
+  /** q105: quality-aware cluster dedup — keep, per q18/q32 near-dup
+    * component, the LONGEST member (priority = strlen(text), ties to
+    * the smallest id) instead of q32's min-id representative
+    * ([[graft.operators.ClusterDedup.dedupKeepBest]]). The oracle
+    * recomputes the exhaustive pair graph, the exact transitive
+    * closure (q32's recursive CTE), and the per-component argmax —
+    * a fully independent check that the right member of every cluster
+    * survives. Output: the surviving docs (id, n_chars). Gate note:
+    * the exhaustive all-pairs + closure oracle is DuckDB-expensive —
+    * compare runs at sf0.01 (green); at sf0.1 the engine
+    * side is sanity-pinned by the survivor ratio (4756 of ~9.9 K aug
+    * docs, matching sf0.01's 476 of ~990) — the q32 oracle class. */
+  def q105KeepBestDedup(s: SparkSession, dir: String): DataFrame = {
+    val docs = augmentedDocs(s, dir)
+      .select(col("doc_id"), length(col("text")).as("n"))
+    val pairs = q18MinhashNearDup(s, dir).select("id_a", "id_b")
+    graft.operators.ClusterDedup.dedupKeepBest(docs, pairs, "doc_id",
+        col("n"))
+      .select(col("doc_id"), col("n").cast("long").as("n"))
+      .orderBy("doc_id")
+  }
+
+  /* Skew-adversary gates (q114, q115): every
+    * pair-quadratic self-join gate up to r14 planted salted NEAR-UNIFORM
+    * corpora, so the skew posture — rare-first stop-gram prefixes
+    * ([[graft.functions.RarestPrefix]]), the one-directional containment
+    * length filter, the [[graft.functions.SkewWarn]] probes — had never
+    * been demonstrated end-to-end against the input it exists for. These
+    * two gates plant the crawl-scale shape: a fixed boilerplate header
+    * (the "subscribe to our newsletter" banner every page of a scraped
+    * site carries) on 10% of all documents, so each header trigram's
+    * document frequency is ~10% of the corpus — a Zipf head key that
+    * makes any frequency-blind blocking scheme quadratic on the hot
+    * grams (naive gram-bucket join: ~(0.1·N)² candidate pairs from the
+    * header bucket alone), while the rare-first prefix order pushes the
+    * hot grams OUT of every probe prefix and keeps candidates
+    * near-linear ([[graft.tools.ProfileSkew]] measures this;
+    * PLANS.md "Skew-adversary decomposition" records the curve).
+    *
+    * Both gates are exhaustive-oracle checked: DuckDB replays the header
+    * plant and scans ALL pairs, so the blocking layer must stay lossless
+    * under skew, not merely fast.
+    */
+
+  /** The boilerplate banner. 12 words → 10 internal trigrams, every
+    * one out of the corpus vocabulary, so hotness is exactly the
+    * planted 10% and no pre-existing gram's frequency shifts. The
+    * Scala literal and [[headerSqlLit]] must stay identical.
+    * ([[headerWords]] derives the word count, so prose and code
+    * cannot drift.) */
+  private[queries] val header =
+    "subscribe to our newsletter for breaking updates and exclusive daily offers now"
+
+  /** Derived word count — the single source for gram arithmetic. The
+    * require makes the doc'd 12-word/10-trigram arithmetic (and q114's
+    * 9-surviving-grams claim) fail loudly if the banner literal ever
+    * drifts, instead of silently invalidating the gates' hotness
+    * rationale (the r15 13/11 miscount class). */
+  private[queries] val headerWords: Int = header.split(" ").length
+  require(headerWords == 12,
+    s"banner drifted to $headerWords words - q114/q115/q116 gate " +
+      "arithmetic and SkewGateSpec assume 12")
+
+  private val headerSqlLit = s"'$header '"
+
+  private[queries] def withHeader(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      when(pmod(col("doc_id"), lit(10)) === 0,
+          concat(lit(header + " "), col("text")))
+        .otherwise(col("text")).as("text"),
+      col("n_chars"))
+
+  private[queries] val headeredSql =
+    s"""CASE WHEN doc_id % 10 = 0 THEN $headerSqlLit || text
+      |    ELSE text END""".stripMargin
+
+  /** q114's corpus: header-planted documents ∪ perturbed copies of the
+    * long ones (drop the first word; +1M ids — the q43 plant, applied
+    * AFTER the header so hot docs keep 9 of their 10 hot grams — the
+    * drop removes only "subscribe to our" — and the true near-dup
+    * pairs ride through the skew). */
+  private[graft] def jaccardSkewDocs(s: SparkSession, dir: String): DataFrame = {
+    val base = withHeader(Tables.parallel(s, dir, "documents"))
+    val perturbed = base.filter(col("n_chars") >= 100)
+      .select((col("doc_id") + 1000000L).as("doc_id"),
+        expr("substring(text, instr(text, ' ') + 1)").as("text"))
+    base.select("doc_id", "text").unionByName(perturbed)
+  }
+
+  private val jaccardSkewSql =
+    s"""aug AS (
+      |  SELECT doc_id, $headeredSql AS text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 1000000, substr(t, strpos(t, ' ') + 1)
+      |  FROM (SELECT doc_id, $headeredSql AS t
+      |        FROM documents WHERE n_chars >= 100))""".stripMargin
+
+  /** q114: exact trigram Jaccard self-join over the Zipf-hot corpus —
+    * q43's operator and parameters, the adversarial input. The hot
+    * grams sort LAST under the rare-first canonical order, so no probe
+    * prefix contains one and the header buckets are never pair-expanded
+    * ([[graft.operators.JaccardJoin]] step 2-3); the exhaustive oracle
+    * proves losslessness, [[graft.tools.ProfileSkew]] proves the
+    * candidate set stays near-linear. */
+  def q114JaccardSkew(s: SparkSession, dir: String): DataFrame =
+    graft.operators.JaccardJoin.nearDupPairs(jaccardSkewDocs(s, dir),
+      "doc_id", "text", k = 3, minJaccard = 0.8)
+
+  /** q115's corpus: header-planted documents ∪ head snippets (+4M ids,
+    * the q59 plant) that KEEP the header on hot docs — so a hot
+    * snippet's gram set is ~2/3 hot grams, the worst honest shape for
+    * containment blocking: the index side must still index every hot
+    * gram (containment puts no lower bound on |B|'s share), while the
+    * probe prefix must stay hot-free for the join to stay linear.
+    * Snippets take ≥5 words of the ORIGINAL body (not of the headered
+    * text), so every snippet keeps enough doc-specific grams that its
+    * only ≥0.9 containment is its own source — the true-pair set stays
+    * linear under the plant. */
+  private[graft] def containSkewDocs(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.parallel(s, dir, "documents")
+    val w = split(col("text"), " ")
+    val nTake = greatest(lit(5L), floor(size(w) * 35 / 100)).cast("int")
+    val snipBody = concat_ws(" ", slice(w, lit(1), nTake))
+    val snip = docs.filter(col("n_chars") >= 100)
+      .select((col("doc_id") + 4000000L).as("doc_id"),
+        when(pmod(col("doc_id"), lit(10)) === 0,
+            concat(lit(header + " "), snipBody))
+          .otherwise(snipBody).as("text"))
+    withHeader(docs).select("doc_id", "text").unionByName(snip)
+  }
+
+  /** q115: asymmetric trigram containment over the Zipf-hot snippet
+    * corpus — q59's operator and threshold, the adversarial input.
+    * Exhaustive directed all-pairs DuckDB ground truth. */
+  def q115ContainmentSkew(s: SparkSession, dir: String): DataFrame =
+    graft.operators.ContainmentJoin.containedPairs(
+      containSkewDocs(s, dir), "doc_id", "text", k = 3,
+      minContainment = 0.9)
+
+  /* Boilerplate-collapse gates (q116, q117): the boilerplate-ONLY
+    * document cohort — the corner q115 pinned as *exact*
+    * but not *linear*. A doc whose every gram is hot (an empty crawl
+    * page that is nothing but the banner) has no rare gram for the
+    * prefix to pick, so it probes the FULL hot index bucket; a class of
+    * c·N such docs is c·0.1·N² candidate pairs — and, because identical
+    * pages trivially contain each other, the true directed-pair answer
+    * over the raw corpus is itself quadratic, so no lossless blocking
+    * can stay linear on the raw input. The honest defense is the
+    * pipeline's stage order, demonstrated here as product code
+    * ([[graft.operators.ContainmentJoin.containedPairsCollapsed]]):
+    * exact dedup collapses each identical-body class to one
+    * representative in ONE map-side-combined fingerprint shuffle, the
+    * containment join then sees each distinct body once, and both
+    * candidates and output return to data-proportional —
+    * [[graft.tools.ProfileSkew]]'s boilerplate section measures the
+    * cohort's candidate contribution staying linear at 10× data while
+    * the uncollapsed path grows ~100×.
+    *
+    * The gate is exhaustive-oracle checked: DuckDB replays the plant AND
+    * the collapse (group by lower/trim, min-id representative), then
+    * scans all representative pairs — so the composition must stay
+    * lossless, not merely fast.
+    */
+
+  /** Banner minus its last word — still every gram hot. */
+  private val headerShort =
+    header.split(" ").dropRight(1).mkString(" ")
+
+  /** Banner plus one fixed word — 10 of its 11 grams hot
+    * (headerLong→banner containment 10/11 = 0.909, banner→headerLong
+    * 10/10 = 1.0). The EXACT-0.9 borderline the gate pins is
+    * banner→headerShort: 9 of the banner's 10 grams survive the
+    * dropped word, 9/10 = 0.90 — dead on the threshold both engines
+    * must agree on. (Figures per-variant: banner 12 words = 10
+    * trigrams, headerShort 9, headerLong 11.) */
+  private val headerLong = header + " today"
+
+  /** q116's corpus: the q115 header-planted base (banner on 10% of
+    * docs) ∪ a boilerplate-ONLY cohort (+8M ids, one per doc_id % 20
+    * == 0 → 5% of docs, cycling three variants: the banner, banner
+    * minus last word, banner + one word). Within a variant every text
+    * is IDENTICAL — the empty-crawl-page class. */
+  private[graft] def boilerDocs(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.parallel(s, dir, "documents")
+    val variant = expr("pmod(doc_id div 20, 3)")
+    val boiler = docs.filter(pmod(col("doc_id"), lit(20)) === 0)
+      .select((col("doc_id") + 8000000L).as("doc_id"),
+        when(variant === 0, lit(header))
+          .when(variant === 1, lit(headerShort))
+          .otherwise(lit(headerLong)).as("text"))
+    withHeader(docs).select("doc_id", "text").unionByName(boiler)
+  }
+
+  /** q116: exact-collapse + containment over the boilerplate cohort —
+    * directed pairs over min-id representatives of identical bodies. */
+  def q116BoilerplateCollapse(s: SparkSession, dir: String): DataFrame =
+    graft.operators.ContainmentJoin.containedPairsCollapsed(
+      boilerDocs(s, dir), "doc_id", "text", k = 3, minContainment = 0.9)
+
+  /** q117: the Jaccard twin over the same corpus — identical pages are
+    * J=1.0 pairs (quadratic raw answer), the collapse restores linear;
+    * the surviving boilerplate trio itself stays in-answer
+    * (banner↔headerShort 9/10 = 0.90, banner↔headerLong 10/11 = 0.909,
+    * headerShort↔headerLong 9/11 = 0.818 — all over the 0.8 line,
+    * cross-variant structure the oracle must reproduce exactly). */
+  def q117JaccardBoilerCollapse(s: SparkSession, dir: String): DataFrame =
+    graft.operators.JaccardJoin.nearDupPairsCollapsed(
+      boilerDocs(s, dir), "doc_id", "text", k = 3, minJaccard = 0.8)
+
+  /** The q116/q117 plant + collapse as a reusable CTE pair: `raw` =
+    * headered base ∪ boilerplate cohort, `aug` = min-id reps of
+    * lower/trim-identical bodies (the name
+    * [[exactJaccardPairsSql]]'s gram CTE reads from). */
+  private val boilerCollapsedCte =
+    s"""raw AS (
+      |  SELECT doc_id, ${headeredSql} AS text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 8000000,
+      |    CASE CAST((doc_id // 20) % 3 AS INT)
+      |      WHEN 0 THEN '$header'
+      |      WHEN 1 THEN '$headerShort'
+      |      ELSE '$headerLong' END
+      |  FROM documents WHERE doc_id % 20 = 0),
+      |aug AS (
+      |  SELECT min(doc_id) AS doc_id, arg_min(text, doc_id) AS text
+      |  FROM raw GROUP BY lower(trim(text)))""".stripMargin
+
+  /* Budget-bind gates (q118, q119): the stop-gram BUDGET-BIND path
+    * exercised through the DuckDB oracle, not only through
+    * specs. Both gram joins run with a deliberately tiny
+    * `stopGramBudgetBytes` so the Auto path's df≥2 table outgrows the
+    * budget on every scale factor and the operator takes
+    * [[graft.operators.StopGrams.joinPrefix]] — the distributed exact
+    * frequency order — end to end. The oracles are EXACTLY q43's and
+    * q59's exhaustive all-pairs ground truths: the bind path must
+    * reproduce the broadcast path's answers bit-for-bit (both are
+    * lossless consistent total orders ahead of a string-exact verify),
+    * so these gates pin the fallback's correctness at whatever scale
+    * the oracle compare runs.
+    */
+
+  /** 1 KiB = 64 stop-gram entries: bound by construction on every sf
+    * (the sf0.01 corpus alone has thousands of df≥2 trigrams), so the
+    * gate can never silently fall back to the broadcast fast path. */
+  val BindBudgetBytes: Long = 1024L
+
+  /** q118: q43's exact Jaccard self-join, forced through the bind. */
+  def q118JaccardBind(s: SparkSession, dir: String): DataFrame =
+    JaccardJoin.nearDupPairs(augmentedDocs(s, dir),
+      "doc_id", "text", k = 3, minJaccard = 0.8,
+      maxStopGrams = StopGrams.Auto, stopGramBudgetBytes = BindBudgetBytes)
+
+  /** q119: q59's asymmetric containment join, forced through the bind. */
+  def q119ContainmentBind(s: SparkSession, dir: String): DataFrame =
+    ContainmentJoin.containedPairs(snippetCorpus(s, dir),
+        "doc_id", "text", k = 3, minContainment = 0.9,
+        maxStopGrams = StopGrams.Auto, stopGramBudgetBytes = BindBudgetBytes)
+      .orderBy("id_a", "id_b")
+
+  /* Bind × skew gates (q120, q121): the stop-gram BUDGET-BIND path
+    * under Zipf-hot gram skew — the composition neither family of
+    * prior gates exercised. q114/q115 plant the crawl-scale hot-gram
+    * shape (a boilerplate banner on 10% of documents, so each header
+    * trigram's df is ~10% of the corpus) but always ran the BROADCAST
+    * stop-table path; q118/q119 force the bind fallback
+    * ([[graft.operators.StopGrams.joinPrefix]] — the distributed exact
+    * frequency order, the path that actually runs at 100 TB where the
+    * df≥2 table outgrows any driver budget) but over near-uniform
+    * corpora. These two gates run the bind path ON the skew corpora:
+    * the 1 KiB budget guarantees the Auto path binds at every scale
+    * factor, and the oracles are EXACTLY q114's/q115's exhaustive
+    * all-pairs ground truths, so the fallback must stay lossless under
+    * the hot grams, not merely fast.
+    *
+    * Why this is the adversarial composition: [[StopGrams.joinPrefix]]
+    * annotates every (doc, gram) row with its df via a gram-keyed
+    * shuffle join — a hash partitioning that sends EVERY doc holding a
+    * hot gram to the same partition. Whether that is a straggler is a
+    * measurement question, not a prediction: each doc contributes a
+    * gram at most once (the gram sets are distinct), so a df = 0.1·N
+    * gram adds 0.1·N rows to one partition of a join whose TOTAL row
+    * count is N × avg-grams-per-doc (~50·N here) — the hot partition
+    * must be read against the average partition, from the executed
+    * plan's own metrics. [[graft.tools.ProfileSkew]]'s bind section
+    * stamps exactly that (per-partition row counts of the gram join as
+    * executed, candidate volumes at sf0.1 vs the 10× sf1, and whether
+    * AQE's skew reader fired); PLANS.md "Bind×skew decomposition"
+    * records the curve and names the mechanism from those numbers.
+    */
+
+  /** q120: q114's Zipf-hot Jaccard self-join forced through the bind
+    * (BindBudgetBytes = 1 KiB = 64 stop-gram entries; the
+    * skew corpus has thousands of df≥2 trigrams at every sf, so the
+    * gate can never silently take the broadcast fast path). */
+  def q120JaccardBindSkew(s: SparkSession, dir: String): DataFrame =
+    JaccardJoin.nearDupPairs(jaccardSkewDocs(s, dir),
+      "doc_id", "text", k = 3, minJaccard = 0.8,
+      maxStopGrams = StopGrams.Auto,
+      stopGramBudgetBytes = BindBudgetBytes)
+
+  /** q121: q115's Zipf-hot asymmetric containment forced through the
+    * bind — the worst honest shape (a hot snippet's gram set is ~2/3
+    * hot grams and the index side must still index every hot gram). */
+  def q121ContainmentBindSkew(s: SparkSession, dir: String): DataFrame =
+    ContainmentJoin.containedPairs(containSkewDocs(s, dir),
+        "doc_id", "text", k = 3, minContainment = 0.9,
+        maxStopGrams = StopGrams.Auto,
+        stopGramBudgetBytes = BindBudgetBytes)
+      .orderBy("id_a", "id_b")
+
+  /** q59's exhaustive directed all-pairs ground truth, shared with its
+    * budget-bind twin q119 so the two paths are graded against one SQL. */
+  private val containmentSql =
+    """WITH aug AS (
+      |  SELECT doc_id, text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 4000000,
+      |    array_to_string(string_split(text, ' ')[1:CAST(greatest(5,
+      |      floor(len(string_split(text, ' ')) * 35 / 100)) AS INT)], ' ')
+      |  FROM documents WHERE n_chars >= 100),
+      |sh AS (
+      |  SELECT doc_id,
+      |    list_distinct(list_transform(
+      |      generate_series(1, len(string_split(text, ' ')) - 2),
+      |      i -> string_split(text, ' ')[i] || ' ' ||
+      |           string_split(text, ' ')[i+1] || ' ' ||
+      |           string_split(text, ' ')[i+2])) AS s
+      |  FROM aug),
+      |sh2 AS (SELECT * FROM sh WHERE len(s) > 0)
+      |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+      |  CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s)
+      |    AS containment
+      |FROM sh2 a JOIN sh2 b ON a.doc_id <> b.doc_id
+      |WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s) >= 0.9
+      |ORDER BY id_a, id_b""".stripMargin
+
+  /** q115's exhaustive ground truth, shared with its budget-bind twin
+    * q121 so the two paths are graded against one SQL. */
+  private val containSkewSql =
+    s"""WITH aug AS (
+      |  SELECT doc_id, $headeredSql AS text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 4000000,
+      |    CASE WHEN doc_id % 10 = 0 THEN $headerSqlLit ELSE '' END ||
+      |    array_to_string(string_split(text, ' ')[1:CAST(greatest(5,
+      |      floor(len(string_split(text, ' ')) * 35 / 100)) AS INT)], ' ')
+      |  FROM documents WHERE n_chars >= 100),
+      |sh AS (
+      |  SELECT doc_id,
+      |    list_distinct(list_transform(
+      |      generate_series(1, len(string_split(text, ' ')) - 2),
+      |      i -> string_split(text, ' ')[i] || ' ' ||
+      |           string_split(text, ' ')[i+1] || ' ' ||
+      |           string_split(text, ' ')[i+2])) AS s
+      |  FROM aug),
+      |sh2 AS (SELECT * FROM sh WHERE len(s) > 0)
+      |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+      |  CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s)
+      |    AS containment
+      |FROM sh2 a JOIN sh2 b ON a.doc_id <> b.doc_id
+      |WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s) >= 0.9
+      |ORDER BY id_a, id_b""".stripMargin
+
+  val entries: Seq[Query] = Seq(
+    Query("q18_minhash_neardup", q18MinhashNearDup,
+      exactJaccardPairsSql(3, "0.8")),
+    Query("q43_jaccard_neardup", q43JaccardNearDup,
+      exactJaccardPairsSql(3, "0.8")),
+    Query("q45_distinct_approx", q45DistinctApprox,
+      s"""WITH a AS (
+        |  SELECT lang, approx_distinct
+        |  FROM ${Query.readBack("q45_distinct_approx")}),
+        |e AS (
+        |  SELECT lang, CAST(count(DISTINCT tok) AS BIGINT) AS exact_distinct
+        |  FROM (SELECT lang, unnest(string_split(text, ' ')) AS tok
+        |        FROM documents)
+        |  GROUP BY lang)
+        |SELECT a.lang, a.approx_distinct, e.exact_distinct,
+        |  round(CAST(abs(a.approx_distinct - e.exact_distinct) AS DOUBLE)
+        |    / e.exact_distinct, 6) AS rel_err,
+        |  round(CAST(abs(a.approx_distinct - e.exact_distinct) AS DOUBLE)
+        |    / e.exact_distinct, 6) <= 0.05 AS within_tol
+        |FROM a JOIN e USING (lang) ORDER BY lang""".stripMargin,
+      readBack = true),
+    Query("q44_seq_pack", q44SeqPack,
+      s"""WITH t0 AS (SELECT doc_id,
+        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+        |FROM documents),
+        |ng AS (SELECT greatest(CAST(8 AS BIGINT),
+        |  (sum(n_tokens) + ${SeqPack.DefaultTokensPerGroup - 1}) //
+        |    ${SeqPack.DefaultTokensPerGroup}) AS g FROM t0),
+        |t AS (SELECT doc_id,
+        |  CAST(doc_id % (SELECT g FROM ng) AS BIGINT) AS pack_group,
+        |  n_tokens FROM t0),
+        |c AS (SELECT doc_id, pack_group, n_tokens,
+        |  CAST(sum(n_tokens) OVER (PARTITION BY pack_group ORDER BY doc_id
+        |    ROWS UNBOUNDED PRECEDING) - n_tokens AS BIGINT) AS ts
+        |FROM t)
+        |SELECT doc_id, pack_group, n_tokens,
+        |  CAST(ts // 512 AS BIGINT) AS seq_id,
+        |  CAST(ts % 512 AS BIGINT) AS tok_offset,
+        |  CAST(CASE WHEN n_tokens = 0 THEN 0
+        |       ELSE (ts + n_tokens - 1) // 512 - ts // 512 + 1 END
+        |    AS BIGINT) AS n_seqs
+        |FROM c ORDER BY doc_id""".stripMargin),
+    Query("q20_lang_id", q20LangId,
+      """WITH t AS (SELECT doc_id, ' ' || text || ' ' AS p FROM documents),
+        |s AS (SELECT doc_id,
+        |  (length(p) - length(replace(p, ' the ', ''))) // 5 +
+        |  (length(p) - length(replace(p, ' and ', ''))) // 5 AS s_en,
+        |  (length(p) - length(replace(p, ' der ', ''))) // 5 +
+        |  (length(p) - length(replace(p, ' und ', ''))) // 5 AS s_de,
+        |  (length(p) - length(replace(p, ' le ', ''))) // 4 +
+        |  (length(p) - length(replace(p, ' et ', ''))) // 4 AS s_fr,
+        |  (length(p) - length(replace(p, ' el ', ''))) // 4 +
+        |  (length(p) - length(replace(p, ' y ', ''))) // 3 AS s_es
+        |FROM t)
+        |SELECT doc_id, s_en, s_de, s_fr, s_es,
+        |  CASE WHEN s_en >= greatest(s_de, s_fr, s_es) THEN 'en'
+        |       WHEN s_de >= greatest(s_fr, s_es) THEN 'de'
+        |       WHEN s_fr >= s_es THEN 'fr'
+        |       ELSE 'es' END AS lang_guess
+        |FROM s ORDER BY doc_id""".stripMargin),
+    Query("q21_text_quality", q21TextQuality,
+      """WITH t AS (SELECT doc_id, text,
+        |  CAST(length(text) AS BIGINT) AS n_chars_m,
+        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+        |  CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct
+        |FROM documents)
+        |SELECT doc_id, n_chars_m, n_tokens, n_distinct,
+        |  round(CAST(n_distinct AS DOUBLE) / n_tokens, 6) AS diversity,
+        |  round(CAST(n_chars_m - (n_tokens - 1) AS DOUBLE) / n_tokens, 6)
+        |    AS avg_token_len,
+        |  (n_tokens >= 5 AND n_tokens <= 1000 AND
+        |   round(CAST(n_distinct AS DOUBLE) / n_tokens, 6) >= 0.05)
+        |    AS quality_ok
+        |FROM t ORDER BY doc_id""".stripMargin),
+    Query("q22_token_count", q22TokenCount,
+      """WITH t AS (SELECT lang,
+        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS ws,
+        |  CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]'))
+        |    AS BIGINT) AS re
+        |FROM documents)
+        |SELECT lang, count(*) AS n_docs,
+        |  CAST(sum(ws) AS BIGINT) AS sum_ws_toks,
+        |  CAST(sum(re) AS BIGINT) AS sum_re_toks,
+        |  round(CAST(sum(ws) AS DOUBLE) / count(*), 6) AS avg_ws_toks
+        |FROM t GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("q23_fingerprint", q23Fingerprint,
+      """SELECT source, count(DISTINCT lower(trim(text))) AS n_unique,
+        | count(*) AS n_docs
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin),
+    // Read-back oracles (q24/q28/q31): re-derive every SQL-expressible
+    // column of the returned rows from the raw tables; see each query's
+    // scaladoc for the verified-vs-echoed split.
+    Query("q24_simhash_neardup", q24SimhashNearDup,
+      s"""WITH $augmentedSql,
+        |sh AS (
+        |  SELECT doc_id,
+        |    list_distinct(list_transform(
+        |      generate_series(1, len(string_split(text, ' ')) - 2),
+        |      i -> string_split(text, ' ')[i] || ' ' ||
+        |           string_split(text, ' ')[i+1] || ' ' ||
+        |           string_split(text, ' ')[i+2])) AS s
+        |  FROM aug),
+        |pairs AS (SELECT id_a, id_b, hamming FROM ${Query.readBack("q24_simhash_neardup")})
+        |SELECT p.id_a, p.id_b, p.hamming,
+        |  CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
+        |    len(list_distinct(list_concat(a.s, b.s))) AS jaccard
+        |FROM pairs p
+        |JOIN sh a ON a.doc_id = p.id_a
+        |JOIN sh b ON b.doc_id = p.id_b
+        |WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
+        |    len(list_distinct(list_concat(a.s, b.s))) >= 0.5
+        |ORDER BY id_a, id_b""".stripMargin, readBack = true),
+    Query("q31_winnow_neardup", q31WinnowNearDup,
+      s"""WITH $augmentedSql,
+        |sh AS (
+        |  SELECT doc_id,
+        |    list_distinct(list_transform(
+        |      generate_series(1, len(string_split(text, ' ')) - 2),
+        |      i -> string_split(text, ' ')[i] || ' ' ||
+        |           string_split(text, ' ')[i+1] || ' ' ||
+        |           string_split(text, ' ')[i+2])) AS s
+        |  FROM aug),
+        |pairs AS (SELECT id_a, id_b, shared_fps FROM ${Query.readBack("q31_winnow_neardup")})
+        |SELECT p.id_a, p.id_b, p.shared_fps,
+        |  CASE WHEN len(list_distinct(list_concat(a.s, b.s))) = 0 THEN 0.0
+        |       ELSE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
+        |            len(list_distinct(list_concat(a.s, b.s))) END AS jaccard
+        |FROM pairs p
+        |JOIN sh a ON a.doc_id = p.id_a
+        |JOIN sh b ON b.doc_id = p.id_b
+        |ORDER BY id_a, id_b""".stripMargin, readBack = true),
+    Query("q25_embed_neardup", q25EmbedNearDup,
+      """WITH corpus AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings
+        |  UNION ALL
+        |  SELECT vec_id + 1000000, list_transform(embedding::DOUBLE[], x -> x * 2),
+        |         label
+        |  FROM embeddings)
+        |SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.label,
+        |  round(list_cosine_similarity(a.v, b.v), 6) AS cos
+        |FROM corpus a JOIN corpus b
+        |  ON a.label = b.label AND a.vec_id < b.vec_id
+        |WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.999
+        |ORDER BY id_a, id_b""".stripMargin),
+    Query("q32_cluster_dedup", q32ClusterDedup,
+      s"""WITH RECURSIVE $augmentedSql,
+        |sh AS (
+        |  SELECT doc_id,
+        |    list_distinct(list_transform(
+        |      generate_series(1, len(string_split(text, ' ')) - 2),
+        |      i -> string_split(text, ' ')[i] || ' ' ||
+        |           string_split(text, ' ')[i+1] || ' ' ||
+        |           string_split(text, ' ')[i+2])) AS s
+        |  FROM aug),
+        |sh2 AS (SELECT * FROM sh WHERE len(s) > 0),
+        |p AS (
+        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+        |  FROM sh2 a JOIN sh2 b ON a.doc_id < b.doc_id
+        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
+        |      len(list_distinct(list_concat(a.s, b.s))) >= 0.8),
+        |e AS (SELECT id_a AS s, id_b AS d FROM p
+        |      UNION ALL SELECT id_b, id_a FROM p),
+        |reach(s, d) AS (
+        |  SELECT s, d FROM e
+        |  UNION
+        |  SELECT r.s, e2.d FROM reach r JOIN e e2 ON r.d = e2.s)
+        |SELECT s AS doc_id, CAST(least(s, min(d)) AS BIGINT) AS rep_id
+        |FROM reach GROUP BY s ORDER BY doc_id""".stripMargin),
+    Query("q33_embed_neardup_lsh", q33EmbedNearDupLsh,
+      """WITH corpus AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+        |  UNION ALL
+        |  SELECT vec_id + 1000000, list_transform(embedding::DOUBLE[], x -> x * 2)
+        |  FROM embeddings)
+        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |  round(list_cosine_similarity(a.v, b.v), 6) AS cos
+        |FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
+        |WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.999
+        |ORDER BY id_a, id_b""".stripMargin),
+    Query("q35_repetition", q35Repetition,
+      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+        |g AS (
+        |  SELECT doc_id, unnest(list_transform(
+        |    generate_series(1, len(ws) - 1),
+        |    i -> ws[i] || ' ' || ws[i+1])) AS gram
+        |  FROM w),
+        |c AS (SELECT doc_id, gram, count(*) AS n FROM g GROUP BY doc_id, gram)
+        |SELECT doc_id,
+        |  CAST(sum(n) AS BIGINT) AS n_bigrams,
+        |  CAST(max(n) AS BIGINT) AS top_bigram_n,
+        |  round(CAST(max(n) AS DOUBLE) / sum(n), 6) AS top_frac,
+        |  round(CAST(max(n) AS DOUBLE) / sum(n), 6) >= 0.18 AS repetitive
+        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("q36_pii_extract", q36PiiExtract,
+      """SELECT event_id,
+        |  event_type || CAST(user_id AS VARCHAR) || '@example.com' AS email_1,
+        |  event_type || '_admin@corp.io' AS email_2,
+        |  CAST(user_id % 900 + 100 AS VARCHAR) || '-' ||
+        |    CAST((user_id * 7) % 9000 + 1000 AS VARCHAR) AS phone,
+        |  CAST(3 AS BIGINT) AS n_pii
+        |FROM events ORDER BY event_id""".stripMargin),
+    Query("q37_contamination", q37Contamination,
+      """WITH tw AS (SELECT doc_id, string_split(text, ' ') AS w
+        |            FROM documents WHERE doc_id % 20 <> 0),
+        |bw AS (SELECT string_split(text, ' ') AS w
+        |       FROM documents WHERE doc_id % 20 = 0),
+        |bg AS (SELECT DISTINCT array_to_string(w[i:i+3], ' ') AS gram
+        |       FROM bw, UNNEST(range(1, greatest(len(w) - 2, 1))) AS t(i)),
+        |tg AS (SELECT DISTINCT doc_id, array_to_string(w[i:i+3], ' ') AS gram
+        |       FROM tw, UNNEST(range(1, greatest(len(w) - 2, 1))) AS t(i)),
+        |cnt AS (SELECT doc_id, count(*) AS n_hit
+        |        FROM tg JOIN bg USING(gram) GROUP BY doc_id),
+        |tot AS (SELECT doc_id, count(*) AS n_grams FROM tg GROUP BY doc_id)
+        |SELECT d.doc_id AS doc_id,
+        |  CAST(coalesce(tot.n_grams, 0) AS BIGINT) AS n_grams,
+        |  CAST(coalesce(cnt.n_hit, 0) AS BIGINT) AS n_contaminated,
+        |  CASE WHEN coalesce(tot.n_grams, 0) = 0 THEN CAST(0.0 AS DOUBLE)
+        |       ELSE round(CAST(coalesce(cnt.n_hit, 0) AS DOUBLE)
+        |                  / tot.n_grams, 6) END AS contam_frac,
+        |  coalesce(cnt.n_hit, 0) >= 1 AS contaminated
+        |FROM (SELECT doc_id FROM documents WHERE doc_id % 20 <> 0) d
+        |LEFT JOIN tot ON tot.doc_id = d.doc_id
+        |LEFT JOIN cnt ON cnt.doc_id = d.doc_id
+        |ORDER BY 1""".stripMargin),
+    Query("q38_dedup_corpus", q38DedupCorpus,
+      s"""WITH RECURSIVE $augmentedSql,
+        |aug2 AS (SELECT doc_id, text FROM aug
+        |         UNION ALL
+        |         SELECT doc_id + 2000000, text FROM documents
+        |         WHERE n_chars >= 100),
+        |g AS (SELECT doc_id, text,
+        |        min(doc_id) OVER (PARTITION BY lower(trim(text))) AS erep
+        |      FROM aug2),
+        |reps AS (SELECT doc_id, text FROM g WHERE doc_id = erep),
+        |sh AS (
+        |  SELECT doc_id,
+        |    list_distinct(list_transform(
+        |      generate_series(1, len(string_split(text, ' ')) - 2),
+        |      i -> string_split(text, ' ')[i] || ' ' ||
+        |           string_split(text, ' ')[i+1] || ' ' ||
+        |           string_split(text, ' ')[i+2])) AS s
+        |  FROM reps),
+        |sh2 AS (SELECT * FROM sh WHERE len(s) > 0),
+        |p AS (
+        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+        |  FROM sh2 a JOIN sh2 b ON a.doc_id < b.doc_id
+        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
+        |      len(list_distinct(list_concat(a.s, b.s))) >= 0.8),
+        |e AS (SELECT id_a AS s, id_b AS d FROM p
+        |      UNION ALL SELECT id_b, id_a FROM p),
+        |reach(s, d) AS (
+        |  SELECT s, d FROM e
+        |  UNION
+        |  SELECT r.s, e2.d FROM reach r JOIN e e2 ON r.d = e2.s),
+        |comp AS (SELECT s AS doc_id, least(s, min(d)) AS rep
+        |         FROM reach GROUP BY s),
+        |near_drop AS (SELECT doc_id FROM comp WHERE doc_id <> rep)
+        |SELECT g.doc_id AS doc_id,
+        |  CASE WHEN g.doc_id <> g.erep THEN 'exact_dup'
+        |       WHEN nd.doc_id IS NOT NULL THEN 'near_dup'
+        |       ELSE 'kept' END AS stage,
+        |  (g.doc_id = g.erep AND nd.doc_id IS NULL) AS kept
+        |FROM g LEFT JOIN near_drop nd ON nd.doc_id = g.doc_id
+        |ORDER BY 1""".stripMargin),
+    Query("q39_corpus_mix", q39CorpusMix,
+      """WITH wt AS (
+        |  SELECT 'src' || CAST(i AS VARCHAR) AS source,
+        |    CAST(CASE i % 4 WHEN 0 THEN 0.0 WHEN 1 THEN 0.5
+        |         WHEN 2 THEN 1.0 ELSE 2.5 END AS DOUBLE) AS w
+        |  FROM range(20) t(i)),
+        |n AS (
+        |  SELECT d.doc_id, d.source,
+        |    CAST(floor(w) AS BIGINT) +
+        |      CASE WHEN d.doc_id % 1000 < (w - floor(w)) * 1000
+        |           THEN 1 ELSE 0 END AS nc
+        |  FROM documents d JOIN wt USING(source))
+        |SELECT doc_id, source, CAST(c AS BIGINT) AS copy
+        |FROM n, UNNEST(range(1, nc + 1)) t(c)
+        |ORDER BY doc_id, copy""".stripMargin),
+    Query("q40_quality_filter", q40QualityFilter,
+      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS w
+        |           FROM documents),
+        |m AS (SELECT doc_id,
+        |  CAST(len(w) AS BIGINT) AS n_words,
+        |  round(CAST(length(text) - (len(w) - 1) AS DOUBLE) / len(w), 6)
+        |    AS mean_word_len,
+        |  round(CAST(len(list_distinct(w)) AS DOUBLE) / len(w), 6)
+        |    AS diversity,
+        |  list_has_any(w, ['the', 'a', 'and']) AS stop_ok
+        |FROM t)
+        |SELECT doc_id, n_words, mean_word_len, diversity, stop_ok,
+        |  n_words BETWEEN 50 AND 10000 AS n_words_ok,
+        |  mean_word_len BETWEEN 3.0 AND 10.0 AS word_len_ok,
+        |  diversity >= 0.1 AS diversity_ok,
+        |  (n_words BETWEEN 50 AND 10000 AND
+        |   mean_word_len BETWEEN 3.0 AND 10.0 AND
+        |   diversity >= 0.1 AND stop_ok) AS pass
+        |FROM m ORDER BY doc_id""".stripMargin),
+    Query("q41_corpus_build", q41CorpusBuild,
+      s"""$corpusBuildSqlPrefix
+        |SELECT doc_id, source, CAST(c AS BIGINT) AS copy
+        |FROM n, UNNEST(range(1, nc + 1)) t(c)
+        |ORDER BY doc_id, copy""".stripMargin),
+    Query("q46_corpus_pack", q46CorpusPack,
+      s"""$corpusBuildSqlPrefix,
+        |mixed AS (
+        |  SELECT doc_id, source, CAST(c AS BIGINT) AS copy
+        |  FROM n, UNNEST(range(1, nc + 1)) t(c)),
+        |tok AS (SELECT doc_id,
+        |          CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+        |        FROM corpus),
+        |packrows0 AS (
+        |  SELECT m.doc_id * 8 + m.copy AS row_id, m.doc_id, t.n_tokens
+        |  FROM mixed m JOIN tok t USING (doc_id)),
+        |ng AS (SELECT greatest(CAST(8 AS BIGINT),
+        |  (sum(n_tokens) + ${SeqPack.DefaultTokensPerGroup - 1}) //
+        |    ${SeqPack.DefaultTokensPerGroup}) AS g FROM packrows0),
+        |packrows AS (
+        |  SELECT row_id,
+        |    CAST(doc_id % (SELECT g FROM ng) AS BIGINT) AS pack_group, n_tokens
+        |  FROM packrows0),
+        |cum AS (
+        |  SELECT row_id, pack_group, n_tokens,
+        |    CAST(sum(n_tokens) OVER (PARTITION BY pack_group ORDER BY row_id
+        |      ROWS UNBOUNDED PRECEDING) - n_tokens AS BIGINT) AS ts
+        |  FROM packrows)
+        |SELECT row_id, pack_group, n_tokens,
+        |  CAST(ts // 512 AS BIGINT) AS seq_id,
+        |  CAST(ts % 512 AS BIGINT) AS tok_offset,
+        |  CAST(CASE WHEN n_tokens = 0 THEN 0
+        |       ELSE (ts + n_tokens - 1) // 512 - ts // 512 + 1 END
+        |    AS BIGINT) AS n_seqs
+        |FROM cum ORDER BY row_id""".stripMargin),
+    Query("q47_semantic_dedup", q47SemanticDedup,
+      s"""WITH RECURSIVE out AS (
+        |  SELECT vec_id, cell FROM ${Query.readBack("q47_semantic_dedup")}),
+        |corpus AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+        |  UNION ALL
+        |  SELECT vec_id + 1000000, list_transform(embedding::DOUBLE[], x -> x * 2)
+        |  FROM embeddings),
+        |m AS (SELECT o.vec_id, o.cell, c.v FROM out o JOIN corpus c USING (vec_id)),
+        |p AS (
+        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
+        |  FROM m a JOIN m b ON a.cell = b.cell AND a.vec_id < b.vec_id
+        |  WHERE a.cell <> -1
+        |    AND round(list_cosine_similarity(a.v, b.v), 6) >= 0.999),
+        |e AS (SELECT id_a AS s, id_b AS d FROM p
+        |      UNION ALL SELECT id_b, id_a FROM p),
+        |reach(s, d) AS (
+        |  SELECT s, d FROM e
+        |  UNION
+        |  SELECT r.s, e2.d FROM reach r JOIN e e2 ON r.d = e2.s),
+        |rep AS (SELECT s AS vec_id, least(s, min(d)) AS rep_id
+        |        FROM reach GROUP BY s)
+        |SELECT m.vec_id, m.cell,
+        |  CAST(coalesce(rep.rep_id, m.vec_id) AS BIGINT) AS rep_id,
+        |  coalesce(rep.rep_id, m.vec_id) = m.vec_id AS kept
+        |FROM m LEFT JOIN rep USING (vec_id) ORDER BY m.vec_id""".stripMargin,
+      readBack = true),
+    Query("q49_dup_spans", q49DupSpans,
+      s"""WITH $augmentedSql,
+        |toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM aug),
+        |g2 AS (SELECT doc_id, i AS pos, array_to_string(w[i:i+9], ' ') AS gram
+        |       FROM toks, UNNEST(range(1, greatest(len(w) - 8, 1))) AS t(i)),
+        |dup AS (SELECT gram FROM g2 GROUP BY gram HAVING count(*) >= 2),
+        |cov AS (SELECT doc_id, pos, pos + 9 AS e FROM g2 JOIN dup USING (gram)),
+        |isl AS (SELECT doc_id, pos, e,
+        |          max(e) OVER (PARTITION BY doc_id ORDER BY pos
+        |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
+        |        FROM cov),
+        |isl2 AS (SELECT doc_id, pos, e,
+        |           sum(CASE WHEN pmax IS NULL OR pos > pmax + 1
+        |               THEN 1 ELSE 0 END)
+        |             OVER (PARTITION BY doc_id ORDER BY pos
+        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |             AS island
+        |         FROM isl),
+        |spans AS (SELECT doc_id, island, min(pos) AS s, max(e) AS e2
+        |          FROM isl2 GROUP BY doc_id, island),
+        |prof AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dup_spans,
+        |           CAST(sum(e2 - s + 1) AS BIGINT) AS dup_tokens
+        |         FROM spans GROUP BY doc_id)
+        |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_tokens,
+        |  CAST(coalesce(p.n_dup_spans, 0) AS BIGINT) AS n_dup_spans,
+        |  CAST(coalesce(p.dup_tokens, 0) AS BIGINT) AS dup_tokens,
+        |  round(CAST(coalesce(p.dup_tokens, 0) AS DOUBLE) / len(t.w), 6)
+        |    AS dup_ratio
+        |FROM toks t LEFT JOIN prof p USING (doc_id)
+        |ORDER BY doc_id""".stripMargin),
+    Query("q50_perplexity", q50Perplexity,
+      s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS w
+        |           FROM documents),
+        |bo AS (SELECT doc_id, w[i] AS p, w[i] || ' ' || w[i+1] AS b
+        |       FROM d, UNNEST(range(1, greatest(len(w), 1))) AS t(i)),
+        |tf AS (SELECT doc_id, b, p, CAST(count(*) AS BIGINT) AS tf
+        |       FROM bo GROUP BY 1, 2, 3),
+        |c2 AS (SELECT b, CAST(sum(tf) AS BIGINT) AS c2 FROM tf GROUP BY b),
+        |c1 AS (SELECT p, CAST(sum(tf) AS BIGINT) AS c1 FROM tf GROUP BY p),
+        |v AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS v
+        |      FROM (SELECT unnest(string_split(text, ' ')) AS tok
+        |            FROM documents)),
+        |term AS (SELECT tf.doc_id,
+        |    CAST(ln((CAST(c2.c2 AS DOUBLE) + 1.0) /
+        |        CAST(c1.c1 + v.v AS DOUBLE)) * tf.tf
+        |      AS DECIMAL(28,12)) AS s,
+        |    tf.tf AS tf
+        |  FROM tf JOIN c2 USING (b) JOIN c1 USING (p) CROSS JOIN v),
+        |agg AS (SELECT doc_id, sum(s) AS ss,
+        |          CAST(sum(tf) AS BIGINT) AS n_bigrams
+        |        FROM term GROUP BY doc_id)
+        |SELECT d.doc_id, CAST(len(d.w) AS BIGINT) AS n_tokens,
+        |  CAST(coalesce(a.n_bigrams, 0) AS BIGINT) AS n_bigrams,
+        |  round(-CAST(a.ss AS DOUBLE) / a.n_bigrams, 6) AS nll,
+        |  CASE WHEN a.doc_id IS NULL THEN 'unscored'
+        |       WHEN round(-CAST(a.ss AS DOUBLE) / a.n_bigrams, 6)
+        |         <= CAST($perplexityHeadMax AS DOUBLE) THEN 'head'
+        |       WHEN round(-CAST(a.ss AS DOUBLE) / a.n_bigrams, 6)
+        |         <= CAST($perplexityMiddleMax AS DOUBLE) THEN 'middle'
+        |       ELSE 'tail' END AS bucket
+        |FROM d LEFT JOIN agg a USING (doc_id)
+        |ORDER BY doc_id""".stripMargin),
+    Query("q51_incremental_dedup", q51IncrementalDedup,
+      """WITH hist AS (SELECT doc_id, text FROM documents),
+        |newb AS (
+        |  SELECT doc_id + 1000000 AS doc_id,
+        |    substr(text, strpos(text, ' ') + 1) AS text
+        |  FROM documents WHERE n_chars >= 100
+        |  UNION ALL
+        |  SELECT doc_id + 2000000, text FROM documents WHERE n_chars >= 100
+        |  UNION ALL
+        |  SELECT doc_id + 3000000,
+        |    array_to_string(list_reverse(string_split(text, ' ')), ' ')
+        |  FROM documents WHERE n_chars >= 100),
+        |ex AS (SELECT n.doc_id, CAST(count(*) AS BIGINT) AS n_exact
+        |       FROM newb n JOIN hist h
+        |         ON lower(trim(n.text)) = lower(trim(h.text))
+        |       GROUP BY 1),
+        |ns AS (SELECT doc_id, list_distinct(list_transform(
+        |         generate_series(1, len(string_split(text, ' ')) - 2),
+        |         i -> string_split(text, ' ')[i] || ' ' ||
+        |              string_split(text, ' ')[i+1] || ' ' ||
+        |              string_split(text, ' ')[i+2])) AS s
+        |       FROM newb
+        |       WHERE doc_id NOT IN (SELECT doc_id FROM ex)),
+        |hs AS (SELECT doc_id, list_distinct(list_transform(
+        |         generate_series(1, len(string_split(text, ' ')) - 2),
+        |         i -> string_split(text, ' ')[i] || ' ' ||
+        |              string_split(text, ' ')[i+1] || ' ' ||
+        |              string_split(text, ' ')[i+2])) AS s
+        |       FROM hist),
+        |nr AS (SELECT n.doc_id, CAST(count(*) AS BIGINT) AS n_near
+        |       FROM ns n JOIN hs h
+        |         ON len(n.s) > 0 AND len(h.s) > 0
+        |        AND CAST(len(list_intersect(n.s, h.s)) AS DOUBLE) /
+        |            len(list_distinct(list_concat(n.s, h.s))) >= 0.8
+        |       GROUP BY 1)
+        |SELECT n.doc_id,
+        |  CASE WHEN ex.doc_id IS NOT NULL THEN 'exact'
+        |       WHEN nr.doc_id IS NOT NULL THEN 'near'
+        |       ELSE 'new' END AS verdict,
+        |  CAST(coalesce(ex.n_exact, nr.n_near, 0) AS BIGINT) AS n_dups
+        |FROM newb n
+        |LEFT JOIN ex ON ex.doc_id = n.doc_id
+        |LEFT JOIN nr ON nr.doc_id = n.doc_id
+        |ORDER BY n.doc_id""".stripMargin),
+    Query("q52_pii_redact", q52PiiRedact,
+      """SELECT event_id,
+        |  'user ' || CAST(user_id AS VARCHAR) ||
+        |    ' contact <EMAIL> or <EMAIL> tel <PHONE> src <IP>' AS redacted,
+        |  CAST(4 AS BIGINT) AS n_redacted
+        |FROM events ORDER BY event_id""".stripMargin),
+    Query("q53_reshard", q53Reshard,
+      s"""WITH o AS (SELECT doc_id, h, shard, pos
+        |           FROM ${Query.readBack("q53_reshard")}),
+        |j AS (SELECT d.doc_id, o.h FROM documents d
+        |      LEFT JOIN o ON o.doc_id = d.doc_id),
+        |r AS (SELECT doc_id, h,
+        |        CAST(((h % 32) + 32) % 32 AS INTEGER) AS shard,
+        |        CAST(row_number() OVER (
+        |          PARTITION BY ((h % 32) + 32) % 32
+        |          ORDER BY h, doc_id) AS BIGINT) AS pos
+        |      FROM j)
+        |SELECT doc_id, h, shard, pos FROM r
+        |ORDER BY shard, pos""".stripMargin, readBack = true),
+    Query("q57_text_normalize", q57TextNormalize,
+      s"""SELECT doc_id,
+        |  trim(regexp_replace(nfc_normalize(regexp_replace(
+        |    $plantedSql,
+        |    '[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]', '', 'g')),
+        |    '[ \\t\\n\\r]+', ' ', 'g')) AS norm_text
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("q58_topk_sketch", q58TopkSketch,
+      s"""WITH r AS (SELECT * FROM ${Query.readBack("q58_topk_sketch")}),
+        |w AS (SELECT string_split(text, ' ') AS w FROM documents),
+        |g AS (SELECT w[i] || ' ' || w[i + 1] AS term
+        |      FROM w, UNNEST(generate_series(1, len(w) - 1)) t(i)),
+        |ex AS (SELECT term, CAST(count(*) AS BIGINT) AS c
+        |       FROM g GROUP BY 1)
+        |SELECT r.rank, r.term, r.est, r.err
+        |FROM r JOIN ex USING (term)
+        |WHERE r.est >= ex.c AND r.est - r.err <= ex.c
+        |ORDER BY r.rank""".stripMargin, readBack = true),
+    Query("q59_containment_dedup", q59ContainmentDedup, containmentSql),
+    Query("q61_source_quota", q61SourceQuota,
+      // the double-% form is DuckDB's pmod: non-negative like the Spark
+      // side's pmod even if a future data generation ships negative ids
+      // (a multiply overflow errors loudly in DuckDB instead of wrapping)
+      """SELECT source, CAST(rank AS INT) AS rank, doc_id,
+        |  ((doc_id * 2654435761) % 1000000007 + 1000000007) % 1000000007
+        |    AS pri
+        |FROM (
+        |  SELECT source, doc_id,
+        |    row_number() OVER (PARTITION BY source
+        |      ORDER BY ((doc_id * 2654435761) % 1000000007 + 1000000007)
+        |        % 1000000007, doc_id) AS rank
+        |  FROM documents) t
+        |WHERE rank <= 15
+        |ORDER BY source, rank""".stripMargin),
+    Query("q65_doc_chunk", q65DocChunk,
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w,
+        |             len(string_split(text, ' ')) AS n FROM documents),
+        |e AS (SELECT doc_id, w, n, CAST(i AS BIGINT) AS i
+        |      FROM t, UNNEST(range(1, n + 1, 40)) AS u(i))
+        |SELECT doc_id,
+        |  CAST((i - 1) // 40 AS INT) AS chunk_id,
+        |  array_to_string(w[i:least(i + 49, n)], ' ') AS chunk,
+        |  CAST(least(n - i + 1, 50) AS INT) AS n_tokens
+        |FROM e
+        |WHERE i = 1 OR n - i + 1 >= 10
+        |ORDER BY doc_id, chunk_id""".stripMargin),
+    Query("q66_quality_topfrac", q66QualityTopfrac,
+      """WITH t AS (SELECT source, doc_id,
+        |             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+        |           FROM documents),
+        |r AS (SELECT source, doc_id, n_tokens,
+        |        CAST(row_number() OVER (PARTITION BY source
+        |          ORDER BY n_tokens DESC, doc_id) AS INT) AS rank,
+        |        count(*) OVER (PARTITION BY source) AS cnt
+        |      FROM t)
+        |SELECT source, rank, doc_id, n_tokens FROM r
+        |WHERE 10 * rank <= 7 * cnt
+        |ORDER BY source, rank""".stripMargin),
+    Query("q64_source_overlap", q64SourceOverlap,
+      """WITH aug AS (
+        |  SELECT doc_id, text, source FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 1000000,
+        |    substr(text, instr(text, ' ') + 1),
+        |    'src' || CAST((doc_id + 1) % 20 AS VARCHAR)
+        |  FROM documents WHERE n_chars >= 100),
+        |sh AS (
+        |  SELECT doc_id,
+        |    list_distinct(list_transform(
+        |      generate_series(1, len(string_split(text, ' ')) - 2),
+        |      i -> string_split(text, ' ')[i] || ' ' ||
+        |           string_split(text, ' ')[i+1] || ' ' ||
+        |           string_split(text, ' ')[i+2])) AS s
+        |  FROM aug),
+        |sh2 AS (SELECT * FROM sh WHERE len(s) > 0),
+        |pairs AS (
+        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+        |  FROM sh2 a JOIN sh2 b ON a.doc_id < b.doc_id
+        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
+        |      len(list_distinct(list_concat(a.s, b.s))) >= 0.8)
+        |SELECT least(sa.source, sb.source) AS source_a,
+        |  greatest(sa.source, sb.source) AS source_b,
+        |  CAST(count(*) AS BIGINT) AS pair_cnt
+        |FROM pairs
+        |JOIN aug sa ON pairs.id_a = sa.doc_id
+        |JOIN aug sb ON pairs.id_b = sb.doc_id
+        |GROUP BY 1, 2
+        |ORDER BY 1, 2""".stripMargin),
+    Query("q96_temperature_mix", q96TemperatureMix,
+      s"""WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
+        |tot AS (SELECT sum(n) AS bign FROM c),
+        |sp AS (SELECT CAST(sum(CAST(
+        |    pow(CAST(n AS DOUBLE) / CAST(bign AS DOUBLE), $mixAlpha)
+        |    AS DECIMAL(28,12))) AS DOUBLE) AS s
+        |  FROM c CROSS JOIN tot),
+        |w AS (SELECT source, n,
+        |    pow(CAST(n AS DOUBLE) / CAST(bign AS DOUBLE), $mixAlpha) / s
+        |      * CAST(bign AS DOUBLE) / CAST(n AS DOUBLE) AS w
+        |  FROM c CROSS JOIN tot CROSS JOIN sp),
+        |m AS (SELECT d.source,
+        |    CAST(floor(w.w) AS BIGINT) +
+        |      CASE WHEN d.doc_id % 1000 < (w.w - floor(w.w)) * 1000
+        |        THEN 1 ELSE 0 END AS nc
+        |  FROM documents d JOIN w ON w.source = d.source)
+        |SELECT w.source, CAST(w.n AS BIGINT) AS n_orig,
+        |  CAST(mm.n_mixed AS BIGINT) AS n_mixed,
+        |  round(w.w, 6) AS weight
+        |FROM w JOIN (SELECT source, sum(nc) AS n_mixed FROM m GROUP BY 1) mm
+        |  ON mm.source = w.source
+        |WHERE mm.n_mixed > 0
+        |ORDER BY w.source""".stripMargin),
+    Query("q75_edit_dist_join", q75EditDistJoin,
+      s"""WITH d AS (SELECT doc_id, substr(text, 1, $editHeadChars) AS head
+        |           FROM documents WHERE n_chars >= $editHeadChars)
+        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |  CAST(levenshtein(a.head, b.head) AS BIGINT) AS dist
+        |FROM d a JOIN d b ON a.doc_id < b.doc_id
+        |WHERE levenshtein(a.head, b.head) <= $editDistMax
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    Query("q105_keepbest_dedup", q105KeepBestDedup,
+      s"""WITH RECURSIVE ${augmentedSql},
+        |sh AS (
+        |  SELECT doc_id,
+        |    list_distinct(list_transform(
+        |      generate_series(1, len(string_split(text, ' ')) - 2),
+        |      i -> string_split(text, ' ')[i] || ' ' ||
+        |           string_split(text, ' ')[i+1] || ' ' ||
+        |           string_split(text, ' ')[i+2])) AS s
+        |  FROM aug),
+        |sh2 AS (SELECT * FROM sh WHERE len(s) > 0),
+        |p AS (
+        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+        |  FROM sh2 a JOIN sh2 b ON a.doc_id < b.doc_id
+        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
+        |      len(list_distinct(list_concat(a.s, b.s))) >= 0.8),
+        |e AS (SELECT id_a AS s, id_b AS d FROM p
+        |      UNION ALL SELECT id_b, id_a FROM p),
+        |reach(s, d) AS (
+        |  SELECT s, d FROM e
+        |  UNION
+        |  SELECT r.s, e2.d FROM reach r JOIN e e2 ON r.d = e2.s),
+        |comp AS (SELECT s AS doc_id, least(s, min(d)) AS rep
+        |         FROM reach GROUP BY s),
+        |mem AS (SELECT c.doc_id, c.rep, strlen(a.text) AS n
+        |        FROM comp c JOIN aug a ON a.doc_id = c.doc_id),
+        |rk AS (SELECT doc_id,
+        |         row_number() OVER (PARTITION BY rep
+        |           ORDER BY n DESC, doc_id) AS r
+        |       FROM mem),
+        |losers AS (SELECT doc_id FROM rk WHERE r > 1)
+        |SELECT CAST(a.doc_id AS BIGINT) AS doc_id,
+        |  CAST(strlen(a.text) AS BIGINT) AS n
+        |FROM aug a
+        |WHERE NOT EXISTS (SELECT 1 FROM losers l
+        |                  WHERE l.doc_id = a.doc_id)
+        |ORDER BY doc_id""".stripMargin),
+    Query("q114_jaccard_skew", q114JaccardSkew,
+      exactJaccardPairsSql(3, "0.8", jaccardSkewSql)),
+    Query("q115_containment_skew", q115ContainmentSkew, containSkewSql),
+    Query("q117_jaccard_boiler_collapse", q117JaccardBoilerCollapse,
+      exactJaccardPairsSql(3, "0.8", boilerCollapsedCte)),
+    Query("q116_boilerplate_collapse", q116BoilerplateCollapse,
+      s"""WITH aug AS (
+        |  SELECT doc_id, ${headeredSql} AS text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 8000000,
+        |    CASE CAST((doc_id // 20) % 3 AS INT)
+        |      WHEN 0 THEN '$header'
+        |      WHEN 1 THEN '$headerShort'
+        |      ELSE '$headerLong' END
+        |  FROM documents WHERE doc_id % 20 = 0),
+        |reps AS (
+        |  SELECT min(doc_id) AS doc_id, arg_min(text, doc_id) AS text
+        |  FROM aug GROUP BY lower(trim(text))),
+        |sh AS (
+        |  SELECT doc_id,
+        |    list_distinct(list_transform(
+        |      generate_series(1, len(string_split(text, ' ')) - 2),
+        |      i -> string_split(text, ' ')[i] || ' ' ||
+        |           string_split(text, ' ')[i+1] || ' ' ||
+        |           string_split(text, ' ')[i+2])) AS s
+        |  FROM reps),
+        |sh2 AS (SELECT * FROM sh WHERE len(s) > 0)
+        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |  CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s)
+        |    AS containment
+        |FROM sh2 a JOIN sh2 b ON a.doc_id <> b.doc_id
+        |WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s) >= 0.9
+        |ORDER BY id_a, id_b""".stripMargin),
+    Query("q118_jaccard_bind", q118JaccardBind,
+      exactJaccardPairsSql(3, "0.8")),
+    Query("q119_containment_bind", q119ContainmentBind,
+      containmentSql),
+    Query("q120_jaccard_bind_skew", q120JaccardBindSkew,
+      exactJaccardPairsSql(3, "0.8", jaccardSkewSql)),
+    Query("q121_containment_bind_skew", q121ContainmentBindSkew,
+      containSkewSql))
 }

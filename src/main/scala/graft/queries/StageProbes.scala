@@ -67,13 +67,13 @@ object StageProbes {
     Map(
       "q18_minhash_neardup" -> Seq(
         "sig_bands" -> { (s: SparkSession, dir: String) =>
-          val docs = LlmPipeline.augmentedDocs(s, dir)
+          val docs = Corpus.augmentedDocs(s, dir)
           MinHashLsh.bandBuckets(docs, col("doc_id"),
             ColumnBridge.col(graft.functions.MinHashTextSignature(
               ColumnBridge.expr(col("text")), 3, 64)), 64, 32)
         },
         "candidates" -> { (s: SparkSession, dir: String) =>
-          val docs = LlmPipeline.augmentedDocs(s, dir)
+          val docs = Corpus.augmentedDocs(s, dir)
           MinHashLsh.candidatePairs(
             MinHashLsh.bandBuckets(docs, col("doc_id"),
               ColumnBridge.col(graft.functions.MinHashTextSignature(
@@ -84,7 +84,7 @@ object StageProbes {
         // sample + iterations) over the doubled corpus — fixed-job
         // overhead that a small sf0.1 denominator amortizes away
         "centroid_train" -> { (s: SparkSession, dir: String) =>
-          val (corpus, nCells) = LlmPipeline.q47Corpus(s, dir)
+          val (corpus, nCells) = Corpus.q47Corpus(s, dir)
           graft.operators.Ann.trainCentroids(
             corpus.filter(size(col("embedding")) > 0), "vec_id",
             "embedding", nCells, iters = 2,
@@ -94,7 +94,7 @@ object StageProbes {
         // + the assignment map (nearest-cell per vector) — the
         // corpus-linear stage
         "assign" -> { (s: SparkSession, dir: String) =>
-          val (corpus, nCells) = LlmPipeline.q47Corpus(s, dir)
+          val (corpus, nCells) = Corpus.q47Corpus(s, dir)
           val cents = graft.operators.Ann.trainCentroids(
             corpus.filter(size(col("embedding")) > 0), "vec_id",
             "embedding", nCells, iters = 2,
@@ -118,7 +118,7 @@ object StageProbes {
         // the gram-df table: corpus gram hashing + the one (gram, df)
         // count shuffle — the stage that scales with corpus tokens
         "gram_df" -> { (s: SparkSession, dir: String) =>
-          val g = CorpusExtras.snippetCorpus(s, dir)
+          val g = Corpus.snippetCorpus(s, dir)
             .select(col("doc_id").as("__id"),
               ColumnBridge.col(graft.functions.SortedGramHashes(
                 ColumnBridge.expr(col("text")), 3)).as("__g"))
@@ -130,7 +130,7 @@ object StageProbes {
         // the full containment join minus the row's final global sort
         "pairs_unsorted" -> { (s: SparkSession, dir: String) =>
           graft.operators.ContainmentJoin.containedPairs(
-            CorpusExtras.snippetCorpus(s, dir), "doc_id", "text",
+            Corpus.snippetCorpus(s, dir), "doc_id", "text",
             k = 3, minContainment = 0.9)
         }),
       "q116_boilerplate_collapse" -> Seq(
@@ -139,13 +139,13 @@ object StageProbes {
         // quadratic into rep-count work
         "collapse" -> { (s: SparkSession, dir: String) =>
           graft.operators.DedupPipeline.collapseExact(
-            Round16.boilerDocs(s, dir), "doc_id", "text")
+            Corpus.boilerDocs(s, dir), "doc_id", "text")
         },
         // + the collapsed corpus's (gram, df) table — gram hashing +
         // the one count shuffle (the q59 probe shape over THIS corpus)
         "gram_df" -> { (s: SparkSession, dir: String) =>
           val g = graft.operators.DedupPipeline.collapseExact(
-            Round16.boilerDocs(s, dir), "doc_id", "text")
+            Corpus.boilerDocs(s, dir), "doc_id", "text")
             .select(col("doc_id").as("__id"),
               ColumnBridge.col(graft.functions.SortedGramHashes(
                 ColumnBridge.expr(col("text")), 3)).as("__g"))
@@ -156,10 +156,10 @@ object StageProbes {
         }),
       "q106_video_neardup" -> Seq(
         "plant_read" -> { (s: SparkSession, dir: String) =>
-          Round9.q106Media(s, dir)
+          Media.q106Media(s, dir)
         },
         "avghash_map" -> { (s: SparkSession, dir: String) =>
-          Round9.q106Media(s, dir).select(col("media_id"),
+          Media.q106Media(s, dir).select(col("media_id"),
             graft.operators.VideoDedup.avgHash(col("payload")).as("__h"))
         }))
 }

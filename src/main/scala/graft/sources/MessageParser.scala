@@ -51,11 +51,15 @@ object MessageParser {
     val withParsed = df
       .withColumn("__parsed", parsed(col("value"), specs, cfg))
       .filter(col("__parsed").isNotNull)
-    val cols = specs.map { s =>
-      if (isVirtual(s.name)) virtualColumn(s.name).cast(s.ctype.sparkType).as(s.name)
-      else col("__parsed").getField(s.name).as(s.name)
-    }
-    withParsed.select(cols: _*)
+    withParsed.select(columns(specs): _*)
+  }
+
+  /** The typed output columns over a frame holding `__parsed` and the
+    * Kafka source columns: one field per data spec, one cast source
+    * column per virtual spec. */
+  def columns(specs: Seq[ColumnSpec]): Seq[Column] = specs.map { s =>
+    if (isVirtual(s.name)) virtualColumn(s.name).cast(s.ctype.sparkType).as(s.name)
+    else col("__parsed").getField(s.name).as(s.name)
   }
 
   /** `__kafka_topic` / `__kafka_partition` / `__kafka_offset`

@@ -6,6 +6,11 @@ import graft.sources.{JsonParser, JValue, ParserConfig}
 /** Task configuration — the declarable unit of the engine, mirroring the
   * reference's task-config JSON (config/config.go:105-155,
   * docker/test_fixed_schema.json). One TaskConfig ↔ one StreamingQuery.
+  *
+  * `dynamicSchema` and `geoipHandle` are parsed only for parity with the
+  * reference config; nothing reads them. The caller chooses the pipeline
+  * itself: it passes an `enrich` stage (e.g. [[graft.enrich.Enrich]]) to
+  * [[TaskRunner]], and runs [[DynamicTask]] for a dynamic schema.
   */
 final case class TaskConfig(
     name: String,

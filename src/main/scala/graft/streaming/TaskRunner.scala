@@ -62,13 +62,7 @@ object TaskRunner {
         // with max, not sum, in StreamMetrics
         coalesce(max(col("offset")), lit(-1L)).as("ConsumeOffsets"))
       .filter(col("__parsed").isNotNull)
-    val projected = withParsed.select(dataSpecs.map { s =>
-      if (MessageParser.isVirtual(s.name))
-        (if (s.name.endsWith("_topic")) col("topic")
-         else if (s.name.endsWith("_partition")) col("partition")
-         else col("offset")).cast(s.ctype.sparkType).as(s.name)
-      else col("__parsed").getField(s.name).as(s.name)
-    }: _*)
+    val projected = withParsed.select(MessageParser.columns(dataSpecs): _*)
     val withSeries =
       if (cfg.prometheusSchema) {
         // Prometheus-schema mode (config/config.go:141-142): series id +
@@ -124,9 +118,8 @@ object TaskRunner {
     * `spark.sql.shuffle.partitions`, closing the default-sizing trap
     * the r9 decomposition diagnosed (a 62 K-row trigger on 32 session
     * partitions spends more time on store-commit cycles than on rows).
-    * Override with `statePartitions` when trigger volume is not
-    * bufferSize-bound (e.g. rate-limited sources). The sizing is pinned
-    * into the checkpoint at first batch and wins on restart
+    * The sizing is pinned into the checkpoint at first batch and wins on
+    * a restart with a different `bufferSize`
     * ([[StatefulDedup.withStatePartitions]] CHECKPOINT COMPAT).
     *
     * The conf scope is restored as soon as `start()` returns: Spark
@@ -144,8 +137,7 @@ object TaskRunner {
       numShards: Int = 1,
       availableNow: Boolean = false,
       dedupKey: Option[String] = None,
-      dedupTtlMs: Long = 0L,
-      statePartitions: Option[Int] = None): StreamingQuery = {
+      dedupTtlMs: Long = 0L): StreamingQuery = {
     val core = build(cfg, enrich, numShards = 1)(source)
     val gated = dedupKey.fold(core)(k =>
       StatefulDedup.firstSeen(core, k, dedupTtlMs))
@@ -161,10 +153,8 @@ object TaskRunner {
       }
       .start()
     if (dedupKey.isEmpty) start()
-    else StatefulDedup.withStatePartitions(
-      source.sparkSession,
-      statePartitions.getOrElse(
-        StatefulDedup.statePartitionsFor(cfg.bufferSize.toLong)))(start())
+    else StatefulDedup.withStatePartitions(source.sparkSession,
+      StatefulDedup.statePartitionsFor(cfg.bufferSize.toLong))(start())
   }
 }
 

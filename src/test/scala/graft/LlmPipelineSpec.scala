@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.LlmPipeline
+import graft.queries.{Corpus, Retrieval}
 
 /** Non-vacuity / completeness pins for the read-back-oracle queries
   * (q24/q28/q31). The read-back oracle proves every RETURNED row honest
@@ -27,7 +27,7 @@ class LlmPipelineSpec extends SparkSuite {
   test("q24 simhash recovers the planted near-dup pairs within its hamming cut") {
     val planted = plantedPairs
     assert(planted.nonEmpty)
-    val got = LlmPipeline.q24SimhashNearDup(spark, dir)
+    val got = Corpus.q24SimhashNearDup(spark, dir)
       .select("id_a", "id_b", "hamming").collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
     assert(got.nonEmpty, "q24 returned zero pairs — vacuous oracle")
@@ -42,7 +42,7 @@ class LlmPipelineSpec extends SparkSuite {
 
   test("q31 winnowing recovers planted pairs (long shared substrings guarantee fps)") {
     val planted = plantedPairs
-    val got = LlmPipeline.q31WinnowNearDup(spark, dir)
+    val got = Corpus.q31WinnowNearDup(spark, dir)
       .select("id_a", "id_b", "shared_fps", "jaccard").collect()
       .map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getDouble(3)))).toMap
     assert(got.nonEmpty, "q31 returned zero pairs — vacuous oracle")
@@ -57,7 +57,7 @@ class LlmPipelineSpec extends SparkSuite {
   }
 
   test("q28 IVF returns exactly k ranked neighbors per query") {
-    val rows = LlmPipeline.q28IvfAnn(spark, dir)
+    val rows = Retrieval.q28IvfAnn(spark, dir)
       .select("q_id", "rank", "nn_id", "cos").collect()
     val byQ = rows.groupBy(_.getLong(0))
     assert(byQ.nonEmpty, "q28 returned zero rows — vacuous oracle")

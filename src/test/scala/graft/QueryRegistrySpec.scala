@@ -2,44 +2,49 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the query registry: [[SparkEntry.queries]] and
-  * [[SparkEntry.oracleSql]] are the union of the per-module maps, with
-  * no name shared between modules and no entry dropped. Runs no Spark
-  * job. */
+import graft.queries.Query
+
+/** Pins the query registry: [[SparkEntry.queries]], [[SparkEntry.oracleSql]]
+  * and [[SparkEntry.oracleInputCopies]] derive from the modules' entries,
+  * no name is shared between modules, and every name, oracle string and
+  * read-back flag matches `query_registry.txt`. Runs no Spark job. */
 class QueryRegistrySpec extends AnyFunSuite {
   private val modules = SparkEntry.modules
 
+  private def sha256(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+
   test("120 query names, unique across modules") {
-    val names = modules.flatMap(_.queries.keys)
+    val names = modules.flatMap(_.entries.map(_.name))
     assert(names.size === 120)
     assert(names.distinct.size === names.size)
     assert(SparkEntry.queries.size === 120)
   }
 
-  test("every query has an oracle and every oracle a query") {
-    assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
-    modules.foreach(m => assert(m.queries.keySet === m.oracles.keySet))
-  }
-
-  test("read-back copies name queries of their own module") {
-    assert(SparkEntry.oracleInputCopies.nonEmpty)
-    modules.foreach { m =>
-      assert(m.oracleInputCopies.toSet.subsetOf(m.queries.keySet))
+  test("registry matches the pinned names, oracle hashes and read-back flags") {
+    val src = scala.io.Source.fromResource("query_registry.txt")
+    val pinned = try src.getLines().filterNot(_.startsWith("#")).toList
+      finally src.close()
+    val got = SparkEntry.queries.keys.toList.sorted.map { n =>
+      s"$n ${sha256(SparkEntry.oracleSql(n))} ${SparkEntry.oracleInputCopies(n)}"
     }
-    assert(SparkEntry.oracleInputCopies.subsetOf(SparkEntry.queries.keySet))
+    assert(got === pinned)
   }
 
   test("merged maps hold exactly the per-module entries") {
-    modules.foreach { m =>
-      m.queries.foreach { case (k, f) => assert(SparkEntry.queries(k) eq f) }
-      m.oracles.foreach { case (k, sql) => assert(SparkEntry.oracleSql(k) == sql) }
+    modules.flatMap(_.entries).foreach { q =>
+      assert(SparkEntry.queries(q.name) eq q.build)
+      assert(SparkEntry.oracleSql(q.name) == q.oracle)
+      assert(SparkEntry.oracleInputCopies(q.name) == q.readBack)
     }
-    assert(SparkEntry.oracleSql.size === modules.map(_.oracles.size).sum)
+    assert(SparkEntry.oracleSql.size === modules.map(_.entries.size).sum)
   }
 
   test("a name registered by two modules is rejected") {
+    def q(name: String) = Query(name, (_, _) => null, "")
     val e = intercept[IllegalArgumentException](
-      SparkEntry.union(Seq(Map("q_a" -> 1, "q_b" -> 2), Map("q_b" -> 3))))
+      SparkEntry.union(Seq(q("q_a"), q("q_b"), q("q_b"))))
     assert(e.getMessage.contains("q_b"))
   }
 }
